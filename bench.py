@@ -91,32 +91,25 @@ HEADLINE = [
     "q_changelog_session_agg",
     "q_retractable_topn",
     "q_updatable_topn",
-    # round-12: timeouts under greedy() — the sink-guard kill scans add
-    # one window-scan column per greedy stage to the same multi-pass
-    # timeout shape (no new shuffles beyond the q_cep_timeout model)
+    # timed-out partial matches: every timeout entry runs its prefix
+    # plans through the one per-key decision core in ONE keyed
+    # mapInPandas stage; the shapes below differ in plan count and
+    # per-start enumeration cost. greedy(): sink-guard kills and span
+    # filters
     "q_cep_timeout_greedy",
-    # round-13: timeouts under greedy()+allowCombinations() — the
-    # times(2,3) bound caps the fluid subset enumeration at O(k^2) per
-    # start; survival stays the same persist/kill-scan model
+    # greedy()+allowCombinations(): the times(2,3) bound caps the fluid
+    # subset enumeration at O(k^2) per start
     "q_cep_timeout_comb_greedy",
-    # round-12 late: group-loop timeouts with until() — the per-
-    # iteration-topology prefix plans (1a/1b/between) multiply the
-    # engine passes but each stays one keyed scan; the until kill adds
-    # one window-scan column shared across plans
+    # group-loop timeouts with until(): per-iteration-topology prefix
+    # plans (1a/1b/between) plus one until kill flag
     "q_cep_timeout_group_until",
-    # round-12 late: optional-tail group-loop timeouts — the fluid-link
-    # two-path filter runs inside the per-start enumeration (numpy
-    # scans over candidate link gaps), so the cost model stays the
-    # multi-pass keyed-scan shape with a branching per-start tree
+    # optional-tail group loops: the fluid-link two-path filter runs
+    # inside the per-start enumeration
     "q_cep_timeout_group_opt",
-    # round 14: bounded inner quantifiers in group loops (dual runtime
-    # counters) — and since round 14 every multi-plan timeout query
-    # runs ONE consolidated match pass (match_recognize_multi) instead
-    # of one keyed shuffle per prefix plan
+    # bounded inner quantifiers in group loops (dual runtime counters)
     "q_cep_timeout_group_times",
-    # round 14 late: GREEDY inner loops in group loops — per-run sink
-    # guard on the consolidated prefix enumerations + a 'gap' kill on
-    # the loop's sink copy; same one-consolidated-pass cost model
+    # GREEDY inner loops in group loops: per-run sink guard on the
+    # prefix enumerations + a 'gap' kill on the loop's sink copy
     "q_cep_timeout_group_greedy",
 ]
 

@@ -128,9 +128,11 @@ from reshape_on_flink_spark.operators.cep import (
     _parse_after_match as _parse_after_match_cep,
 )
 from reshape_on_flink_spark.operators.cep import (
+    TimeoutFlags,
     match_recognize,
-    match_recognize_multi,
     streaming_match_recognize,
+    symbols_of,
+    timed_out_partials,
 )
 
 _KINDS = (
@@ -399,7 +401,7 @@ def _greedy_span_specs(stages) -> list:
     return specs
 
 
-def _build_pandas_define(pattern) -> dict:
+def _build_pandas_define(pattern, strict: bool = True) -> dict:
     """Streaming DEFINE dict for a COMPILED pattern: user symbols from
     their where() predicates + the streaming negation recipes compile()
     recorded (until()/not_next folds/group untils, ``_stage_negs_pd``),
@@ -407,21 +409,31 @@ def _build_pandas_define(pattern) -> dict:
     from ``_lgap_pandas`` — ("true", None, negs) -> all-True minus
     negations, ("not_cond", f, negs) -> ~f(pdf) minus negations (a
     relaxed loop's filler may never swallow an event the loop body
-    would match, nor a stop/NOT event)."""
+    would match, nor a stop/NOT event).
+
+    ``strict=False`` maps a symbol that has no pandas form to None
+    instead of raising (the timeout compiler registers both forms of
+    every condition and each route demands its own)."""
     import pandas as pd
 
+    def _no_form(msg: str):
+        if strict:
+            raise ValueError(msg)
+        return None
+
     pandas_define = {}
-    for s in _positive_leaf_stages(pattern._stages):
-        if s.pandas_cond is None and s.iter_cond is None:
-            raise ValueError(
-                f"streaming CEP needs vectorized pandas predicates; "
-                f"stage {s.name!r} has only a Catalyst condition "
-                f"(pass a `pdf -> bool array` callable to where())"
-            )
+    leaves = list(_positive_leaf_stages(pattern._stages))
+    no_pd = [s.name for s in leaves if s.pandas_cond is None and s.iter_cond is None]
+    if no_pd and strict:
+        raise ValueError(
+            f"streaming CEP needs vectorized pandas predicates; "
+            f"stage {no_pd[0]!r} has only a Catalyst condition "
+            f"(pass a `pdf -> bool array` callable to where())"
+        )
 
     def _materialize(base_fn, negs, name, negate_base=False):
         if any(n is None for n in negs):
-            raise ValueError(
+            return _no_form(
                 f"streaming CEP: {name!r} carries a negation "
                 "(until()/notFollowedBy/not_next fold) with no "
                 "pandas form — pass a `pdf -> bool array` "
@@ -442,17 +454,21 @@ def _build_pandas_define(pattern) -> dict:
         return fn
 
     stage_negs_pd = getattr(pattern, "_stage_negs_pd", {})
-    for s in _positive_leaf_stages(pattern._stages):
+    for s in leaves:
+        if s.name in no_pd:
+            pandas_define[s.name] = None
+            continue
         body = _materialize(s.pandas_cond, stage_negs_pd.get(s.name, []), s.name)
-        if s.lead_not:
+        negs = [p for _c, p in s.lead_not or ()]
+        if body is None or not s.lead_not:
+            pandas_define[s.name] = body
+        elif any(p is None for p in negs):
+            pandas_define[s.name] = _no_form(
+                "streaming not_next needs a vectorized pandas "
+                "predicate on the NOT stage"
+            )
+        else:
             # relaxed not_next: next-row lookahead via shift(-1)
-            negs = [p for _c, p in s.lead_not]
-            if any(p is None for p in negs):
-                raise ValueError(
-                    "streaming not_next needs a vectorized pandas "
-                    "predicate on the NOT stage"
-                )
-
             def _lead_wrapped(pdf, base=body, negs=negs):
                 n = pd.Series(negs[0](pdf), index=pdf.index)
                 for f in negs[1:]:
@@ -460,19 +476,25 @@ def _build_pandas_define(pattern) -> dict:
                 return base(pdf) & ~n.shift(-1, fill_value=False)
 
             pandas_define[s.name] = _lead_wrapped
-        else:
-            pandas_define[s.name] = body
     for name, (kind, fn, negs) in pattern._lgap_pandas.items():
         if kind == "not_cond" and fn is None:
-            raise ValueError(
+            pandas_define[name] = _no_form(
                 f"streaming CEP: loop filler {name!r} needs the loop "
                 "body's pandas predicate (pass a `pdf -> bool array` "
                 "callable to the looping stage's where())"
             )
+            continue
         pandas_define[name] = _materialize(
             fn, negs, name, negate_base=(kind == "not_cond")
         )
     return pandas_define
+
+
+def _check_stage_name(name) -> None:
+    """Stage names become pattern symbols and column names
+    (``__sym_<name>``), so they must be plain identifiers."""
+    if not isinstance(name, str) or not name.isidentifier():
+        raise ValueError(f"stage name must be an identifier, got {name!r}")
 
 
 class Pattern:
@@ -491,6 +513,7 @@ class Pattern:
             # group pattern sequence start (Pattern.java:503)
             p._stages.append(_Stage(name="__group0", kind="begin", group=name))
             return p
+        _check_stage_name(name)
         p._stages.append(_Stage(name=name, kind="begin"))
         return p
 
@@ -504,8 +527,7 @@ class Pattern:
             return self
         if any(s.name == name for s in self._stages):
             raise ValueError(f"duplicate stage name {name!r}")
-        if not name.isidentifier():
-            raise ValueError(f"stage name must be an identifier, got {name!r}")
+        _check_stage_name(name)
         self._stages.append(_Stage(name=name, kind=kind))
         return self
 
@@ -1509,283 +1531,85 @@ class PatternStream:
         src/main/java/org/apache/flink/cep/PatternStream.java:202-214),
         pinned by NFAITCase.java:405 ``testSimplePatternWithTimeoutHandling``.
 
-        Semantics (derived from the reference test; NFA.advanceTime):
-        a timed-out partial match is EVERY live partial branch at its
-        horizon ``first_row_ts + within`` — not just the longest prefix
-        — tagged with that horizon as ``timeout_ts``. Expiry is
-        event-driven: it fires only if the partition has a row at/after
-        the horizon (``advanceTime`` runs per arriving event). Whether
-        a branch is still live at the horizon depends on the link kind
-        of the stage it is WAITING for:
+        **What times out.** Every live partial branch at its horizon
+        ``first_row_ts + within`` (``NFA.advanceTime``), tagged with that
+        horizon as ``timeout_ts``. Expiry is event-driven: it fires only
+        if the key has a row at/after the horizon. Whether a branch is
+        still live depends on the NFA state it is parked in:
 
-        - ``followed_by_any`` waiters persist after a sibling take, so
-          both ``{start}`` and ``{start, middle}`` time out;
-        - ``followed_by`` waiters are CONSUMED by the first take-able
-          event — the branch is live iff no event satisfying the
-          waiting stage's condition lies in ``(last_row_ts, horizon)``;
-        - ``next`` waiters die on the adjacent event (it either extends
-          the branch or kills it) — live iff NO event at all lies in
-          ``(last_row_ts, horizon)``.
-
-        Spark-first compile: for each proper stage-prefix the engine
-        enumerates the partial assignments under ``no_skip`` (the branch
-        set), then the survival test is a per-partition lookahead —
-        ``min(tick) over following rows`` for the first take-able /
-        adjacent event and ``max(tick) over partition`` for the
-        expiry witness — no range join, one keyed shuffle per prefix.
-
-        Quantified/optional stages (round 10+): a branch's parked NFA
-        state decides its survival guard —
-
-        - parked AT a stage's head state (the previous stage's take
-          chain exited into it — which for a quantified previous stage
-          happens only after exactly ``max`` takes, so infinite loops
-          never park at their successor): the OUTER ignore condition,
-          ``NFACompiler.getIgnoreCondition`` (NFACompiler.java:901) —
-          ``followed_by`` NOT(take), ``next`` none, ``followed_by_any``
-          true. An optional waiting stage changes nothing: PROCEED
-          edges are epsilon (evaluated per arriving event), so an event
-          matching a LATER stage spawns a new branch and leaves the
-          waiter alive.
-        - parked INSIDE a loop (``1 <= taken < max``; both the
-          mandatory ``times`` chain and the optional tail/looping
-          state): the INNER ignore condition,
-          ``NFACompiler.getInnerIgnoreCondition`` (NFACompiler.java:862)
-          — ``consecutive`` none (dies on any event), relaxed (default)
-          NOT(take), ``allow_combinations`` true (persists).
-          ``NFA.advanceTime`` (NFA.java:259-297) reports EVERY pruned
-          partial — a trailing-loop branch times out even though its
-          event set already emitted completed matches via PROCEED.
+        - AT a stage's head state (the previous stage's take chain
+          exited into it; a quantified stage exits by take only after
+          ``max`` takes): the OUTER ignore condition
+          (``NFACompiler.getIgnoreCondition``) — ``followed_by``
+          waiters die at the first take-able event, ``next`` waiters at
+          any event, ``followed_by_any`` waiters persist.
+        - INSIDE a loop (``1 <= taken < max``): the INNER ignore
+          condition (``getInnerIgnoreCondition``) — ``consecutive``
+          dies on any event, relaxed on a take-able one,
+          ``allow_combinations`` persists.
         - MIGRATED COPIES ('IGNORE after PROCEED', NFA.java:621-633):
-          the decision graph collects IGNORE edges of every
-          proceed-reachable head state, so once a loop met its minimum
-          (or an optional waiting stage can be skipped), the first
-          event after the last take spawns a parked copy at each
-          reachable successor whose OUTER ignore fires — the copy then
-          lives (and times out) under that successor's own consumption
-          rule. This is what lets the reference's consecutive() docs
-          matrix match ``C A1 B`` past an adjacent take-able ``A2``; a
-          partial is emitted iff ANY of its computations survives, and
-          computations sharing an event set collapse to one output row
+          once a loop met its minimum, or an optional waiting stage can
+          be skipped, the first event after the last take spawns a
+          parked copy at each PROCEED-reachable successor whose outer
+          ignore fires; the copy then lives under that successor's rule.
+          A partial is reported iff ANY of its computations survives,
+          and computations sharing an event set collapse to one partial
           (NFAITCase compares sets).
 
-        Mid-loop branches are enumerated in ONE engine pass per loop
-        stage: the prefix ending at the loop with quantifier relaxed to
-        ``(1, max-1)`` — every assignment the ITCase-pinned no_skip
-        enumerator emits is exactly a live parked branch (its inner-gap
-        guards are the ignore conditions above).
+        STOP edges kill parked branches silently: ``until()`` on a loop
+        (every wait at or inside the loop, group-inner loops included),
+        ``notFollowedBy`` before the waiting stage (the waiting head and
+        copies parked behind it) and ``not_next`` (only the FIRST gap
+        event counts). ``greedy()`` guards its PROCEED sink with
+        NOT(take) (``updateWithGreedyCondition``): branches parked at
+        the sink die on a loop-take-able gap event, and interior greedy
+        stages keep only the expansions whose jump to the next taken
+        row crossed no such event. ``reluctant()`` changes match
+        emission only, never which branches are live. Unquantified
+        groups flatten into their leaves (``convertPattern``);
+        quantified groups park per iteration topology (inside the first
+        or a later iteration, between iterations, at the successor),
+        gated by iteration counts.
+
+        **Skip strategies.** Under an AfterMatchSkipStrategy an emitted
+        match PRUNES partial branches — they never reach the output
+        (NFA.java:396-436 ``processMatchesAccordingToSkipStrategy``).
+        Completed matches (the first-completed expansion per start, as
+        the match output) queue by START event, and one is emitted only
+        when no live partial starts strictly earlier — a
+        never-completing or later stop-killed earlier branch DEFERS it.
+        At the emission event, partials with start <= pruningId are
+        discarded (STRICT < for SKIP TO FIRST/LAST) unless their horizon
+        already passed. pruningId is the match's last event
+        (``past_last_row``), first event (``to_next_row``), or the
+        first/last event mapped to SYM (``to_first``/``to_last SYM``).
+
+        **Engine.** The fluent pattern compiles into one prefix plan
+        per parked-branch shape: a prefix pattern, the survival rule of
+        its primary branch and migrated copies, kill specs, span kills
+        and count gates. Every condition the plans read is registered
+        once as a (Catalyst, pandas) pair
+        (:class:`~reshape_on_flink_spark.operators.cep.TimeoutFlags`).
+        :func:`~reshape_on_flink_spark.operators.cep.timed_out_partials`
+        runs the plans through ONE per-key decision core on both routes:
+        bounded input in one keyed ``mapInPandas`` stage with the
+        conditions as JVM flag columns, streaming input in
+        ``applyInPandasWithState`` with the pandas predicates and the
+        undecided rows as keyed state. A start is decided once the key
+        holds a row at/after its horizon, so a one-shot bounded run and
+        an incremental replay of the same rows agree.
 
         Output: the partial match's rows (input columns +
         ``matched_symbol``) with ``timeout_id`` (unique with the keys)
         and ``timeout_ts`` (order-column units; timestamp orders give a
         timestamp, numeric orders a double).
 
-        AfterMatchSkipStrategy (round 11): under a skip strategy an
-        emitted match additionally PRUNES partial branches — silently,
-        they never reach the side output (``NFA.java:396-436``
-        ``processMatchesAccordingToSkipStrategy`` +
-        ``aftermatch/AfterMatchSkipStrategy.prune``). The reference
-        dynamics, replayed exactly by ``skip_prune_verdicts``:
-        completed matches queue by START event and one is emitted only
-        when no live partial starts strictly earlier, so a
-        never-completing earlier partial DEFERS the emission until its
-        own horizon reports it; at the emission event, live partials
-        with start event <= pruningId are discarded (STRICT < for
-        SKIP TO FIRST/LAST), where pruningId = the match's last event
-        (``past_last_row``), first event (``to_next_row``), or the
-        first/last event mapped to SYM (``to_first/to_last SYM``). A
-        partial whose horizon is <= the emission tick was already
-        reported by that event's ``advanceTime`` and is NOT pruned.
-        Matches come from the same sequential matcher as the match
-        output (first-completed surviving expansion per start — the
-        reference's earliest-completion winner among same-start
-        candidates, pinned by the cep.md skip-matrix tests). Cost: the
-        skip route runs the prefix enumerations twice (once for the
-        partial summaries feeding the prune replay, once for the
-        output join) plus one full-pattern match pass and one keyed
-        shuffle of (key, rid, tick) for the emission replay.
-
-        Scope: every skip strategy on BOTH routes (round 12 lifted the
-        streaming SKIP TO FIRST/LAST guard: the incremental sequential
-        matcher resumes AT the mapped element via ``_resume_pos``; the
-        resume point is always >= the match start >= frontier − within,
-        so the overlapping rescan stays inside the horizon-bounded
-        keyed buffer, and SkipToElement pruning uses STRICT <).
-
-        STOP-edge kills (round 11): ``until()`` on a non-greedy loop
-        and mid-pattern ``notFollowedBy`` are supported as KILL SCANS —
-        the reference compiles them into stop transitions
-        (NFACompiler.java:785-830 extends take/inner-ignore with
-        NOT(until) + ``addStopStateToLooping``; ``addStopStates`` for
-        NOT gaps), so a parked branch silently dies when a matching
-        event lands in its gap before the horizon: alive iff no kill
-        event in ``(last take, horizon)``. The loop's until guards
-        both the mid-loop branch and the waiting head (r8
-        dual-dialect); a NOT gap guards the waiting head AND any
-        migrated copy parked behind it, while a branch INSIDE a loop
-        has discharged its entry-gap NOT with its first take. NOT
-        stages inside a prefix ride the prefix matcher's gap fillers
-        (an N in an inner gap kills the branch before it ever parks).
-
-        ``not_next`` (round 11, NotPatternITCase adjacency): a strict
-        fold onto a 'next' successor changes take-ability only (the
-        waiter dies on any event regardless); before a RELAXED
-        successor the parked waiter dies iff the FIRST event of its
-        gap matches — an 'adj' kill scan (the carrier's horizon-blind
-        ``lead()`` fold is stripped from terminal prefix stages and
-        reapplied horizon-aware, so an adjacent kill event at/after
-        the horizon loses to ``advanceTime``).
-
-        ``greedy()`` (round 12): the reference ANDs NOT(takeCondition)
-        onto EVERY transition of the greedy stage's PROCEED sink
-        (``NFACompiler.updateWithGreedyCondition``), so branches parked
-        at the successor state — the maxed-out head waiter and mid-loop
-        migrated copies — silently die on any greedy-take-able event in
-        their gap: exactly a 'gap' KILL SCAN on the greedy stage's own
-        take condition (terminal greedy is ignored, GreedyITCase).
-        ``reluctant()`` needs no handling: it is this engine's
-        match-emission extension (deterministic shortest COMPLETION);
-        it never changes which branches are live, so the parked set
-        equals the default's.
-
-        Group patterns (round 12): unquantified, non-optional,
-        until-free groups FLATTEN — NFACompiler converts a non-looping
-        GroupPattern's inner pattern in place between its neighbours,
-        so the inlined leaf list produces the identical parked shapes
-        (park at the group's head leaf, inside it at each inner waiting
-        position, and past it). notFollowedBy before a followedByAny
-        stage rides the same negated_gap kill as before followed_by
-        (NotPatternITCase.testNotFollowedBy pins the scope). Terminal
-        ``notFollowedBy`` under no_skip needs no handling at all: its
-        stop edges attach to the post-prefix PENDING state only.
-
-        Quantified/optional groups (round 12, late): parked shapes
-        enumerate per iteration topology — inside the first iteration
-        (entry-linked inner chain), inside iteration j+1 (group
-        quantified 1..mx-1 + relaxed-linked inner chain), and BETWEEN
-        iterations (consume on the group's entry condition — the r8
-        group-loop filler guard = the NFA ignore edge; PROCEED copies
-        gated by entry-leaf take count >= the loop minimum); a maxed
-        bounded group parks at the successor via the head-park plans.
-
-        Late round 12 lifts: terminal ``notFollowedBy`` under a skip
-        strategy on batch (pendings complete AT horizon close, so the
-        emission replay runs with match etick = horizon); not_next
-        before optional/zero-able successors (copies inherit the
-        park-level 'adj' kill — every PROCEED evaluates on the same
-        first gap event); until() on group loops (stop edges guard
-        every looping position: a 'gap' kill on all group-plan
-        primaries, with the in-progress iteration wrapped as an
-        unquantified partial group so compile threads NOT(until) into
-        its inner takes and gaps); consecutive()/allowCombinations()
-        iteration contiguity on group loops (between-iterations rule
-        'any'/'persist', iteration link next/followedByAny); interior
-        greedy (prefixes de-greedy to enumerate every expansion, then a
-        per-assignment SPAN kill drops expansions with a
-        greedy-take-able event in (last greedy take, next taken row] —
-        the sink guard replayed, batch route only); and greedy before
-        an optional successor (copies beyond the sink spawn-block on a
-        greedy-take-able FIRST gap event: an 'adj' kill). The span-kill
-        enumeration and the horizon-close pending completion both run
-        on the STREAMING route too (numpy span scans per enumerated
-        expansion; the incremental cursor treats terminal-NOT
-        sequences as pendings). Zero-take guard split: a BOUNDED
-        zero-able greedy times-loop guards the ORIGINAL successor
-        (zero-take copies and span expansions included); an unbounded
-        optional loop guards only its sink COPY (zero-take exempt).
-
-        Round-13 lifts: greedy + allow_combinations (the ignoreState
-        has no PROCEED edge, so the sink-jump rule equals relaxed
-        greedy's — existing kills suffice; the match surface switched
-        from possessive commit to enumerate + _greedy_ok span filter,
-        which also fixed early-completion matches the commit dropped);
-        ITERATIVE conditions on scanned stages (per-branch re-
-        evaluation: a cogrouped pandas pass on batch, the candidate
-        walk on streaming); OPTIONAL group-loop ENTRY leaves (the
-        waiter parks at the optable head state whose ignore is
-        NOT(head) only — extra 'fb' copies per optable-chain state,
-        iteration counting by the first mandatory leaf); and the
-        zero-take guard-split correction (without prior NOTs,
-        copyWithoutTransitiveNots returns its argument, so zero-take
-        routes share the guarded sink).
-
-        UNBOUNDED inner loops inside group loops run too (round 13,
-        late): Gq mid-loop plans park branches inside the inner loop
-        per iteration topology (the inner relaxed ignore only forbids
-        skipping the loop's own take-able events, so completions FORK
-        off copies without consuming the loop branch); positions after
-        an unbounded inner loop exist only as its migrated copies (no
-        exit-by-take); TAIL-loop groups have no distinct between-state
-        (the loop branch IS the waiter — the Gq boundary/successor
-        copies subsume the between and head-park plans, their
-        mandatory-leaf count gates closing the books at mx).
-
-        Round-14 lifts: BOUNDED nested quantifiers in group loops
-        (dual runtime counters — parked-inside plans cap the times
-        chain at (1, hi-1) with PROCEED copies gated on a second,
-        current-iteration count column over the un-renamed loop
-        symbol; exit-by-max parks pin the chain at (hi, hi) via
-        _chain_forced; bounded TAILS ride the pinned wA/wB
-        between-plans; times_or_more(n>=2) minima gate the same way);
-        iterative conditions under a STREAMING skip strategy (the
-        incremental cursor threads a flag-carrying IterativeCondition
-        context); and every plan's prefix enumeration runs in ONE
-        consolidated match pass (match_recognize_multi) instead of one
-        keyed shuffle per parked shape.
-
-        UNBOUNDED greedy inner loops in group loops run too (round 14,
-        late): compile's per-run span specs filter the prefix
-        enumerations (a completed iteration whose sink jump crossed a
-        loop-take-able event never existed — _greedy_ok anchors per
-        maximal run, __gq-stripped), and the loop's migrated sink copy
-        carries a 'gap' kill on the loop's own take condition
-        (updateWithGreedyCondition guards every sink transition,
-        ignore included). BOUNDED greedy inner loops stay guarded
-        (_chain_forced pins them exact-times, which emits no span
-        spec).
-
-        Group loops with NO plain mandatory inner leaf run when no
-        iteration-count gate is materialized (round 14, late: lo <= 1
-        and unbounded mx need none). Such iterations can both continue
-        and complete on the same loop take, so a k-take run and its
-        split across iterations are distinct live computations over
-        identical rows — the reference reports ONE partial per event
-        set (NFAITCase), replayed by a set-level cross-plan dedup
-        (streaming: phase-3 signature set; batch: an output-sized
-        collapse pass, enabled only for this shape class).
-
-        until() on INNER loops inside group loops runs too (round 14,
-        late): the stop edges live on the loop's own states
-        (addStopStateToLooping + the init state, r8 dual dialect), so
-        every wait AT or park INSIDE the loop — the head/between/
-        boundary entry waits, the optable-chain copies, the Gq
-        primaries and the loop-targeting 'fb' copies — carries a 'gap'
-        kill on the until condition (_leaf_until_kill), while sink
-        copies cross the stop event (UntilConditionITCase's
-        completion-survives rule); the match/prefix compile already
-        threads NOT(until) into the loop's takes and iteration gaps.
-
-        Interior notFollowedBy folds inside group loops run too
-        (round 14, late): the prefix chains carry the NOT stages (the
-        compile re-derives each iteration copy's negated_gap folds),
-        and the NOT gap kills the waits AT its carrier leaf in every
-        iteration (_leaf_not_kill) — the between/boundary/head entry
-        waits and positions past the carrier are untouched (the take
-        discharged the NOT).
-
-        Remaining loud guards: BOUNDED greedy loops and greedy+until
-        loops inside group loops; leading/trailing inner NOTs and
-        NOTs before loops/optionals in a group loop;
-        all-loop-mandatory group loops that DO need an
-        iteration-count gate (bounded repetitions or minimum >= 2 —
-        nothing to count iterations by); and not_next folds onto
+        Unsupported shapes raise: BOUNDED greedy and greedy+until loops
+        inside group loops; leading/trailing inner NOTs and NOTs before
+        loops/optionals in a group loop; all-loop-mandatory group loops
+        that need an iteration-count gate; ``not_next`` folds onto
         non-strict/quantified carriers.
-        Optional-tail group loops (fluid iteration links) run
-        everywhere — batch, streaming, and under skip strategies on
-        both routes — via the two-path link filter.
         """
-        from pyspark.sql import Window as SW
-
         from reshape_on_flink_spark.operators.cep import _within_delta
 
         pattern, within = self._pattern, self._pattern._within
@@ -1859,37 +1683,20 @@ class PatternStream:
         skip_mode, skip_sym = _parse_after_match_cep(
             self._after, [s.name for s in raw]
         )
-        # SKIP TO FIRST/LAST streams too (round 12): the incremental
-        # matcher resumes AT the mapped element via _resume_pos — the
-        # resume point is >= the match start >= frontier − within, so
-        # the overlapping rescan never leaves the horizon-bounded buffer
-        # terminal notFollowedBy (round 12): its stop edges attach to
-        # the POST-PREFIX pending state only (the full-pattern branch
-        # waiting for its horizon to close N-free — the terminal_not
-        # match surface), so proper-prefix parked shapes are untouched
-        # and the no_skip timeout set needs no handling at all. Under a
-        # skip strategy (batch, late round 12) the pendings fold into
-        # the existing machinery because EVERY terminal-NOT match
+        # terminal notFollowedBy: its stop edges attach to the
+        # POST-PREFIX pending state only (the full-pattern branch waiting
+        # for its horizon to close N-free), so proper-prefix parked
+        # shapes are untouched and the no_skip timeout set needs no
+        # handling. Under a skip strategy every terminal-NOT match
         # completes AT its horizon close (NFA.java advanceTime turns a
-        # timed-out isPending computation into a potential match, so
-        # completion tick = start + within):
-        # - completions are co-ordered with starts, so the sequential
-        #   first-completed-per-start matcher (mrows below) replays
-        #   processMatchesAccordingToSkipStrategy's completedMatches
-        #   pruning exactly — a pending pruned by an earlier emission
-        #   is a start the matcher never resumes into;
-        # - the replay just needs __etick = the HORIZON (not the last
-        #   matched row's tick): a parked partial whose horizon lies in
-        #   (last row, match horizon] is reported by an earlier
-        #   advanceTime and must escape the prune;
-        # - pendings never DEFER emissions: a pending with start s
-        #   gates only matches with later starts, whose completion
-        #   (their horizon) is >= s's own horizon >= any tick where s's
-        #   pending completes or is N-killed — so no gate entries.
-        # The streaming route mirrors this in the operator's
-        # incremental full-pattern cursor: a found sequence is PENDING
-        # until its horizon — killed if an N event lands in (last row,
-        # horizon), else completing with e_tick = the horizon.
+        # timed-out isPending computation into a potential match), so
+        # the core's full-pattern cursor treats a found sequence as
+        # PENDING until its horizon — killed if an N event lands in
+        # (last row, horizon), else completing with e_tick = the horizon.
+        # Completions are then co-ordered with starts, so the
+        # first-completed-per-start cursor replays the completedMatches
+        # pruning exactly, and pendings never defer emissions (a pending
+        # gates only later starts, whose horizons are later).
         terminal_tn = bool(raw) and raw[-1].kind == "not_followed_by"
         # positive-stage view: NOT stages fold onto their neighbours
         # (negated_gap / fold_not / lead_not) and stay inside prefix
@@ -1982,55 +1789,30 @@ class PatternStream:
             return sl
 
         keys, order = self._keys, self._order
-        ocol = order[0]
-        is_time = dict(self._df.dtypes)[ocol].startswith("timestamp")
+        is_time = dict(self._df.dtypes)[order[0]].startswith("timestamp")
         delta = float(_within_delta(within, is_time))
-        tick = (
-            F.unix_micros(F.col(ocol)).cast("double")
-            if is_time
-            else F.col(ocol).cast("double")
-        )
-        wpart = SW.partitionBy(*keys)
-        word = SW.partitionBy(*keys).orderBy(*order)
-        wfollow = word.rowsBetween(1, SW.unboundedFollowing)
-        base = (
-            self._df.withColumn("__to_tick", tick)
-            .withColumn("__to_rid", F.row_number().over(word))
-            .withColumn("__to_pmax", F.max("__to_tick").over(wpart))
-            .withColumn("__to_next_any", F.min("__to_tick").over(wfollow))
-        )
-        user_cols = self._df.columns
 
         n = len(stages)
-        streaming = self._df.isStreaming
-        # survival-scan registry: key -> (catalyst cond | None = scan any
-        # event, pandas cond, iterative flag source name). String keys so
-        # inner-group waiting positions can register scans too (round 12)
+        # every condition the plans read, as (Catalyst, pandas) pairs
+        # addressed by flag id — the decision core walks their boolean
+        # arrays and never evaluates a predicate itself
+        flags = TimeoutFlags()
+        # survival-scan registry: key -> (take flag, iterative condition
+        # | None). String keys so inner-group waiting positions can
+        # register scans too
         scan_specs: dict[str, tuple] = {}
 
         def _need_scan_cond(key, cond, pcond, iter_cond, what, name) -> str:
-            """Register a take-condition survival scan — a Catalyst
-            lookahead column on the batch route, a pandas predicate on
-            the streaming route. An ITERATIVE condition (round 13)
-            makes take-ability branch-dependent: the static part still
-            compiles to the shared column/array, and each parked
-            branch re-evaluates the iterative part per statically-
-            viable gap event with ITS OWN partial match as the
-            IterativeCondition.Context — a cogrouped pandas pass on
-            the batch route, the in-loop candidate walk on streaming."""
-            if streaming:
-                if pcond is None and iter_cond is None:
-                    raise ValueError(
-                        f"streaming timeout side output needs a "
-                        f"vectorized pandas predicate on {what} "
-                        f"{name!r}"
-                    )
-            elif cond is None and pcond is not None and iter_cond is None:
-                raise ValueError(
-                    f"timeout side output needs a Catalyst "
-                    f"condition on {what} {name!r}"
-                )
-            scan_specs[key] = (cond, pcond, iter_cond)
+            """Register a take-condition survival scan. An ITERATIVE
+            condition makes take-ability branch-dependent: the static
+            part is the shared flag (TRUE when the stage is iterative
+            only), and each parked branch re-evaluates the iterative part
+            per statically-viable gap event with ITS OWN partial match
+            as the IterativeCondition.Context."""
+            scan_specs[key] = (
+                flags.add(cond, pcond, f"{what} {name!r}", true_if_missing=True),
+                iter_cond,
+            )
             return key
 
         def _need_scan(i: int, what: str) -> str:
@@ -2050,30 +1832,17 @@ class PatternStream:
                 or s.iter_cond is not None
             )
 
-        # kill scans (round 11): STOP-edge conditions that silently
-        # discard a parked branch when a matching event lands in its
-        # gap — until() on a loop (NFACompiler.java:785-830 extends
-        # take/inner-ignore with NOT(until) and adds the stop state;
-        # r8's dual-dialect finding: the stop also guards the waiting
-        # head) and notFollowedBy before the waiting stage (the NOT
-        # compiles stop transitions on the waiting state). Registered
-        # as (catalyst, pandas) pairs; batch scans them like take
-        # conditions, streaming evaluates the pandas form on the gap.
-        kill_specs: dict[str, tuple] = {}
+        # kill scans: STOP-edge conditions that silently discard a
+        # parked branch when a matching event lands in its gap — until()
+        # on a loop (NFACompiler.java:785-830 extends take/inner-ignore
+        # with NOT(until) and adds the stop state; r8's dual-dialect
+        # finding: the stop also guards the waiting head) and
+        # notFollowedBy before the waiting stage (the NOT compiles stop
+        # transitions on the waiting state). key -> flag id.
+        kill_specs: dict[str, int] = {}
 
         def _need_kill(key: str, cond, pcond, what: str) -> str:
-            if streaming:
-                if pcond is None:
-                    raise ValueError(
-                        f"streaming timeout side output needs a pandas "
-                        f"form of the {what}"
-                    )
-            elif cond is None:
-                raise ValueError(
-                    f"timeout side output needs a Catalyst form of the "
-                    f"{what}"
-                )
-            kill_specs[key] = (cond, pcond)
+            kill_specs[key] = flags.add(cond, pcond, f"the {what}")
             return key
 
         def _kills_for(idx: int, waiting_head: bool) -> tuple:
@@ -2311,16 +2080,14 @@ class PatternStream:
                 "combinations": "followed_by_any",
             }[gs.loop_mode or "relaxed"]
 
-        # plan entries: (pre_stages, tag, primary, copies, loop_gate)
-        plans = []
-        # plan shapes are event-set-disjoint by construction EXCEPT for
+        # plan entries: (pre_stages, tag, primary, copies, loop_gate).
+        # Plan shapes are event-set-disjoint by construction EXCEPT for
         # group loops whose iteration can both continue and complete on
-        # the same loop take (no plain mandatory inner leaf, round 14
-        # late): a k-take run and its split across two iterations are
-        # distinct live computations over identical rows, and the
-        # reference reports ONE partial per event set — the final
-        # assembly then runs a set-level dedup pass
-        overlap_dedup = False
+        # the same loop take (no plain mandatory inner leaf): a k-take
+        # run and its split across two iterations are distinct live
+        # computations over identical rows; the decision core reports
+        # ONE partial per event set.
+        plans = []
         # -- branches parked AT a stage's head state (last take exited
         # the previous stage's chain — only possible after exactly max
         # occurrences of it; infinite loops never exit by take). If the
@@ -2760,8 +2527,6 @@ class PatternStream:
             # gate constructors below raise if a gate is actually
             # needed without a countable leaf.
             cnt_syms = (em, em + "__gq") if em is not None else None
-            if em is None:
-                overlap_dedup = True
 
             def _need_cnt():
                 raise NotImplementedError(
@@ -3169,809 +2934,95 @@ class PatternStream:
         ]
         # -> entries are now (pre_stages, spans, tag, primary, copies, gate)
 
-        if streaming:
-            # horizon-close emission inside a stateful operator: each
-            # parked shape becomes a compiled prefix pattern + pandas
-            # survival predicates; one keyed shuffle, state bounded by
-            # the within horizon (streaming_timed_out_partials)
-            from reshape_on_flink_spark.operators.cep import (
-                streaming_timed_out_partials,
-            )
+        lookahead = W.partitionBy(*keys).orderBy(*order)
 
-            lookahead = W.partitionBy(*keys).orderBy(*order)
-            op_plans = []
-            for pre_stages, spans, tag, primary, copies, gate in plans:
-                pre = Pattern()
-                pre._stages = pre_stages
-                pre._within = within
-                pat_s, _def, _usr, _win = pre.compile(
-                    emit="all", lookahead_window=lookahead
-                )
-                fluid_p = (
-                    list(pre._fluid_links or [])
-                    + _fluid_specs(pre_stages)
-                ) or None
-                spans_p = []
-                for mode, gname, post, kk in spans:
-                    if kill_specs[kk][1] is None:
-                        raise ValueError(
-                            "streaming timeout side output needs a "
-                            "pandas form of the greedy take condition "
-                            f"of {gname!r}"
-                        )
-                    spans_p.append(
-                        (mode, gname, frozenset(post), kill_specs[kk][1])
-                    )
-                op_plans.append(
-                    dict(
-                        pat=pat_s,
-                        spans=spans_p,
-                        fluid=fluid_p,
-                        # per-run sink-guard specs for greedy loops
-                        # inside the prefix's wrapped/renamed groups
-                        # (round 14, late) — candidate-level filter,
-                        # same contract as the batch route's
-                        # pre._greedy_spans threading
-                        greedy=list(pre._greedy_spans or []) or None,
-                        define=_build_pandas_define(pre),
-                        # iterative stage conditions of the prefix
-                        # (round 13): threaded into the operator's
-                        # enumerator so assignments invalid under an
-                        # IterativeCondition are never parked
-                        iter_define=pre._iter_define or None,
-                        user_syms=[
-                            st.name
-                            for st in _positive_leaf_stages(pre_stages)
-                        ],
-                        tag=tag,
-                        primary=(
-                            primary[0],
-                            scan_specs[primary[1]][1]
-                            if primary[0] == "consume"
-                            else None,
-                            [
-                                (fl, kill_specs[kk][1])
-                                for fl, kk in primary[2]
-                            ],
-                            # iterative part of the consume scan (round
-                            # 13): re-evaluated per branch in the
-                            # operator's candidate walk
-                            scan_specs[primary[1]][2]
-                            if primary[0] == "consume"
-                            else None,
-                        ),
-                        copies=[
-                            (
-                                kk,
-                                None if ii is None else scan_specs[ii][1],
-                                [(fl, kill_specs[x][1]) for fl, x in kls],
-                                cg,
-                                None if ii is None else scan_specs[ii][2],
-                            )
-                            for kk, ii, kls, cg in copies
-                        ],
-                        gate=gate,
-                    )
-                )
-            skip_spec = None
-            if skip_mode != "no_skip":
-                # the FULL pattern, compiled emit='first' — the same
-                # first-completed sequential matcher the batch match
-                # output uses; the operator runs it incrementally from
-                # a keyed cursor and replays the emission loop
-                full_pat, _fdef, full_usr, _fwin = pattern.compile(
-                    emit="first", lookahead_window=lookahead
-                )
-                full_fluid = full_greedy = None
-                if pattern._fluid_links or pattern._greedy_spans:
-                    # fluid full pattern / greedy sink guards: the
-                    # cursor enumerates with the candidate filters, so
-                    # it needs the enumerable gap grammar
-                    full_pat, _fdef, full_usr, _fwin = pattern.compile(
-                        emit="all", lookahead_window=lookahead
-                    )
-                    full_fluid = list(pattern._fluid_links) or None
-                    full_greedy = list(pattern._greedy_spans) or None
-                tn_p = None
-                if terminal_tn:
-                    # pendings complete AT horizon close; the cursor
-                    # needs the N predicate to kill them mid-gap
-                    tnc = pattern._terminal_not
-                    if tnc is None or tnc[1] is None:
-                        raise ValueError(
-                            "streaming timeout side output needs a "
-                            "pandas form of the terminal notFollowedBy "
-                            "condition"
-                        )
-                    tn_p = tnc[1]
-                skip_spec = dict(
-                    mode=skip_mode,
-                    sym=skip_sym,
-                    pat=full_pat,
-                    define=_build_pandas_define(pattern),
-                    user_syms=list(full_usr),
-                    tn=tn_p,
-                    fluid=full_fluid,
-                    greedy=full_greedy,
-                    # round 14: the incremental full-pattern cursor
-                    # threads IterativeCondition contexts (the last
-                    # streaming-skip guard)
-                    iter_define=pattern._iter_define or None,
-                )
-            res = streaming_timed_out_partials(
-                self._df, keys, order, list(self._df.columns),
-                op_plans, delta, is_time, skip=skip_spec,
+        def _flagged(pat_obj, emit: str):
+            """Compile ``pat_obj`` and register its DEFINE conditions:
+            (pattern string, symbol -> flag id, user symbols)."""
+            pat_s, cat_def, user_syms, _win = pat_obj.compile(
+                emit=emit, lookahead_window=lookahead
             )
-            return res.withColumn(
-                "matched_symbol",
-                F.regexp_replace(F.col("matched_symbol"), "__gq$", ""),
-            )
+            pd_def = _build_pandas_define(pat_obj, strict=False)
+            define = {
+                sym: flags.add(cat_def.get(sym), pd_def.get(sym), f"stage {sym!r}")
+                for sym in symbols_of(pat_s)
+            }
+            return pat_s, define, list(user_syms)
 
-        it_scan_keys = sorted(
-            k for k in scan_specs if scan_specs[k][2] is not None
-        )
-        # decorations batched into ONE select (not one withColumn each —
-        # every withColumn rebuilds + re-analyzes the whole plan; the
-        # timeout family spent 1.4-3.8 s/query of driver wall in plan
-        # construction, guide §7.3). No decoration references another,
-        # so one projection is equivalent.
-        deco_cols = []
-        for key in sorted(scan_specs):
-            cond, _pc, itc = scan_specs[key]
-            if itc is not None:
-                # iterative scan (round 13): the shared window column
-                # cannot decide branch-dependent take-ability — compute
-                # the STATIC flag only; the per-assignment cogroup pass
-                # in _timeouts evaluates the iterative part against
-                # each branch's own partial match
-                deco_cols.append(
+        def _kills(kls):
+            return [(fl, kill_specs[kk]) for fl, kk in kls]
+
+        op_plans = []
+        for pre_stages, spans, tag, primary, copies, gate in plans:
+            pre = Pattern()
+            pre._stages = pre_stages
+            pre._within = within
+            pat_s, define, _usr = _flagged(pre, "all")
+            consume = primary[0] == "consume"
+            op_plans.append(dict(
+                pat=pat_s,
+                define=define,
+                # the prefix's iterative stage conditions: assignments
+                # invalid under an IterativeCondition are never parked
+                iter_define=pre._iter_define or None,
+                user_syms=[st.name for st in _positive_leaf_stages(pre_stages)],
+                tag=tag,
+                fluid=(list(pre._fluid_links or []) + _fluid_specs(pre_stages)) or None,
+                # per-run sink-guard specs for greedy loops inside the
+                # prefix's wrapped/renamed groups
+                greedy=list(pre._greedy_spans or []) or None,
+                spans=[
+                    (mode, gname, frozenset(post), kill_specs[kk])
+                    for mode, gname, post, kk in spans
+                ],
+                primary=(
+                    primary[0],
+                    scan_specs[primary[1]][0] if consume else None,
+                    _kills(primary[2]),
+                    scan_specs[primary[1]][1] if consume else None,
+                ),
+                copies=[
                     (
-                        F.lit(True)
-                        if cond is None  # iterative-only: static part true
-                        else F.coalesce(cond, F.lit(False))
-                    ).alias(f"__to_its_{key}")
-                )
-                continue
-            src = (
-                F.when(cond, F.col("__to_tick"))
-                if cond is not None
-                else F.col("__to_tick")
-            )
-            deco_cols.append(
-                F.min(src).over(wfollow).alias(f"__to_nt_{key}")
-            )
-        for kk in sorted(kill_specs):
-            # struct min = FIRST kill event in rid order: the rid makes
-            # the 'adj' (not_next) adjacency test tie-proof — with
-            # duplicate order values a same-tick but non-adjacent kill
-            # event must not be mistaken for the directly-adjacent one
-            deco_cols.append(
-                F.min(
-                    F.when(
-                        kill_specs[kk][0],
-                        F.struct("__to_rid", "__to_tick"),
+                        kind,
+                        None if ii is None else scan_specs[ii][0],
+                        _kills(kls),
+                        cg,
+                        None if ii is None else scan_specs[ii][1],
                     )
-                )
-                .over(wfollow)
-                .alias(f"__to_kl_{kk}")
-            )
-        if deco_cols:
-            base = base.select("*", *deco_cols)
-        last_cols = (
-            ["__to_next_any"]
-            + [
-                f"__to_nt_{key}"
-                for key in sorted(scan_specs)
-                if scan_specs[key][2] is None
-            ]
-            + [f"__to_kl_{kk}" for kk in sorted(kill_specs)]
-        )
-        # Measured NON-WIN (round 13, interleaved on/off A/B at sf0.1,
-        # re-confirming the round-11 persist probe): localCheckpoint()ing
-        # the decorated base before the multi-pass fan-out LOST +0.7 to
-        # +3.4 s on every timeout query. The plans do re-derive base per
-        # pass (the skip plan re-runs the events scan 15x), but with the
-        # keyed Python stages pinned to full parallelism the recomputes
-        # are cheap codegen'd JVM work, while a checkpoint serializes one
-        # materialization and downgrades every downstream scan to a
-        # non-codegen ExistingRDD without pruning (guide §1: measure; §5:
-        # cache only when recompute beats the pressure — here it doesn't).
-
-        def _iter_hits(rows, it_keys):
-            """Per-assignment first ITERATIVE take tick (round 13): a
-            cogrouped pandas pass joining each enumerated assignment
-            with its key's events — for every statically-viable gap
-            event, the scan's IterativeCondition re-runs with the
-            branch's own taken rows as the Context (the same
-            ``_IterCtx`` contract the match surface uses). Returns one
-            row per (keys, match_id) with a nullable first-hit tick
-            per scan key."""
-            from reshape_on_flink_spark.operators.cep import _IterCtx
-
-            it_fns = {k: scan_specs[k][2] for k in it_keys}
-            key_fields = [
-                f for f in base.schema.fields if f.name in keys
-            ]
-            schema_out = ", ".join(
-                [f"`{f.name}` {f.dataType.simpleString()}" for f in key_fields]
-                + ["match_id bigint"]
-                + [f"`__itk_{k}` double" for k in it_keys]
-            )
-            asg = rows.select(*keys, "match_id", "__to_rid", "matched_symbol")
-            flag_cols = [f"__to_its_{k}" for k in it_keys]
-            ev = base.select(
-                *user_cols,
-                "__to_rid",
-                "__to_tick",
-                *flag_cols,
-            )
-            ocol_name = ocol
-            dlt = delta
-
-            def fn(key_vals, asg_pdf, ev_pdf):
-                import numpy as np
-                import pandas as pd
-
-                if not len(asg_pdf):
-                    return pd.DataFrame(
-                        columns=[f.name for f in key_fields]
-                        + ["match_id"]
-                        + [f"__itk_{k}" for k in it_keys]
-                    )
-                ev2 = ev_pdf.sort_values("__to_rid").reset_index(drop=True)
-                ticks = ev2["__to_tick"].to_numpy()
-                flags = {
-                    k: ev2[f"__to_its_{k}"].to_numpy().astype(bool)
-                    for k in it_keys
-                }
-                recs = ev2.to_dict("records")
-                out = []
-                for mid, grp in asg_pdf.groupby("match_id", sort=False):
-                    grp = grp.sort_values("__to_rid")
-                    rids = grp["__to_rid"].to_numpy()
-                    names = [
-                        s[:-4] if s.endswith("__gq") else s
-                        for s in grp["matched_symbol"]
-                    ]
-                    sym_idx: dict = {}
-                    taken = []
-                    for rid, nm in zip(rids, names):
-                        si = sym_idx.setdefault(nm, len(sym_idx))
-                        taken.append((int(rid) - 1, si))
-                    symbols = list(sym_idx)
-                    ctx = _IterCtx(recs, symbols, ocol_name)
-                    ctx.taken = tuple(taken)
-                    first_pos = int(rids[0]) - 1
-                    last_pos = int(rids[-1]) - 1
-                    horizon = float(ticks[first_pos]) + dlt
-                    lim = int(np.searchsorted(ticks, horizon, side="left"))
-                    hits = []
-                    for k in it_keys:
-                        hit = None
-                        fnk = it_fns[k]
-                        for p in range(last_pos + 1, lim):
-                            if not flags[k][p]:
-                                continue
-                            ctx.pos = p
-                            if fnk(recs[p], ctx):
-                                hit = float(ticks[p])
-                                break
-                        hits.append(hit)
-                    out.append([*key_vals, int(mid), *hits])
-                return pd.DataFrame(
-                    out,
-                    columns=[f.name for f in key_fields]
-                    + ["match_id"]
-                    + [f"__itk_{k}" for k in it_keys],
-                )
-
-            from reshape_on_flink_spark.session import (
-                PYTHON_STAGE_TASK_BYTES,
-                python_stage_width,
-            )
-
-            # ONE width for both cogroup inputs (sized by the larger,
-            # per-row-scanned side): mismatched capped widths made
-            # EnsureRequirements re-shuffle one side — an extra
-            # exchange in the r14 skip plan
-            n_cg = python_stage_width(ev, task_bytes=PYTHON_STAGE_TASK_BYTES)
-            kcols = [F.col(c) for c in keys]
-            return (
-                asg.repartition(n_cg, *kcols)
-                .groupBy(*keys)
-                .cogroup(ev.repartition(n_cg, *kcols).groupBy(*keys))
-                .applyInPandas(fn, schema=schema_out)
-            )
-
-        def _timeouts(pre_stages, spans, tag: str, primary, copies, gate):
-            """Enumerate the parked branches of one prefix shape; keep
-            an assignment iff its witness row exists AND any of its
-            computations (the primary parked branch or a migrated copy)
-            survives to the horizon. Computations sharing an event set
-            collapse to one emitted partial (NFAITCase compares sets).
-            Returns (branch rows, surviving-branch summaries); the
-            skip-strategy prune filter and final join happen outside."""
-            rows = multi_rows.get(tag)
-            if rows is None:
-                pre = Pattern()
-                pre._stages = pre_stages
-                pre._within = within
-                pre._fluid_extra = _fluid_specs(pre_stages)
-                rows = PatternStream(
-                    base, pre, keys, order, "no_skip"
-                ).flat_select()
-            # Round 14 (guide §7.3, measured): this builder emitted
-            # ~7k py4j round trips per query — every Column operator is
-            # a socket round trip, and the build was 1.4-1.9 s of the
-            # 3-4 s group-family queries. The aggregation and survival
-            # predicates are now composed as SQL STRINGS and parsed
-            # JVM-side in one expr() each — identical Catalyst trees
-            # (same functions, same three-valued-logic chains; symbols
-            # are plain identifiers, counts are int literals), pinned
-            # by the oracle hash equality of all 17 timeout queries.
-            def _q(name: str) -> str:
-                return f"`{name}`"
-
-            def _in_list(syms) -> str:
-                return "(" + ", ".join(f"'{s}'" for s in syms) + ")"
-
-            aggs = [
-                # first/last row picked by the tie-proof per-partition rid
-                "min(struct(__to_rid, __to_tick)).`__to_tick` AS `__first`",
-                "min(__to_rid) AS `__srid`",
-                "max(__to_rid) AS `__lrid`",
-                "any_value(__to_pmax) AS `__pmax`",
-            ]
-            for c in last_cols:
-                aggs.append(
-                    f"max(struct(__to_rid, {_q(c)})).{_q(c)} AS {_q('__l' + c)}"
-                )
-            if gate is not None:
-                aggs.append(
-                    "sum(CAST(matched_symbol IN "
-                    f"{_in_list(gate[0])} AS INT)) AS `__cnt`"
-                )
-                if len(gate) > 3 and gate[2] is not None:
-                    # second counter (round 14, bounded inner loops):
-                    # current-iteration takes of the parked loop leaf
-                    aggs.append(
-                        "sum(CAST(matched_symbol IN "
-                        f"{_in_list(gate[2])} AS INT)) AS `__cnt2`"
-                    )
-            for j2, (mode, gname, post, kkey) in enumerate(spans):
-                # the kill-scan struct AT the span anchor row (the last
-                # greedy row, or the last pre-post row in 'anchor'
-                # mode) = the first greedy-take-able event after it,
-                # and the rid of the first post-greedy taken row
-                anchor = (
-                    f"matched_symbol = '{gname}'"
-                    if mode == "g"
-                    else f"NOT (matched_symbol IN {_in_list(post)})"
-                )
-                aggs.append(
-                    f"max(CASE WHEN {anchor} THEN struct(__to_rid, "
-                    f"{_q('__to_kl_' + kkey)} AS kl) END) AS `__gsp{j2}`"
-                )
-                aggs.append(
-                    f"min(CASE WHEN matched_symbol IN {_in_list(post)} "
-                    f"THEN __to_rid END) AS `__pn{j2}`"
-                )
-            g = (
-                rows.groupBy(*keys, "match_id")
-                .agg(*[F.expr(a) for a in aggs])
-                .withColumn("__horizon", F.col("__first") + F.lit(delta))
-            )
-            plan_it = sorted({
-                k
-                for k in (
-                    [primary[1]] if primary[0] == "consume" else []
-                ) + [ii for _kd, ii, _kl, _cg in copies if ii is not None]
-                if scan_specs[k][2] is not None
-            })
-            if plan_it:
-                g = g.join(
-                    _iter_hits(rows, plan_it), [*keys, "match_id"], "left"
-                )
-
-            def _scan_col(key) -> str:
-                """First consuming-take tick for a scan key: the shared
-                window column for static scans, the per-assignment
-                cogroup column for ITERATIVE ones (round 13)."""
-                if scan_specs[key][2] is not None:
-                    return _q(f"__itk_{key}")
-                return _q(f"__l__to_nt_{key}")
-            for j2 in range(len(spans)):
-                # the reference branch died at the sink before the next
-                # take: a greedy-take-able event at rid <= the first
-                # post-greedy taken row (the take itself carries
-                # NOT(greedy take)) invalidates the whole expansion
-                g = g.where(F.expr(
-                    f"NOT coalesce(`__gsp{j2}`.kl IS NOT NULL AND "
-                    f"`__gsp{j2}`.kl.`__to_rid` <= `__pn{j2}`, false)"
-                ))
-
-            def _clear(col: str) -> str:  # no matching event after the
-                # last take, below the horizon
-                return f"({col} IS NULL OR {col} >= __horizon)"
-
-            def _kills_clear(kills) -> str:
-                cs = []
-                for flavor, kk in kills:
-                    col = _q(f"__l__to_kl_{kk}")
-                    kt = f"{col}.`__to_tick`"
-                    if flavor == "gap":
-                        cs.append(f"({col} IS NULL OR {kt} >= __horizon)")
-                    else:
-                        # 'adj': dies iff the FIRST gap event matches —
-                        # decided by rid adjacency (first-following rid
-                        # is always last-take rid + 1), tie-proof under
-                        # duplicate order values
-                        cs.append(
-                            f"({col} IS NULL OR {col}.`__to_rid` != "
-                            f"__lrid + 1 OR {kt} >= __horizon)"
-                        )
-                return "(" + " AND ".join(cs) + ")" if cs else "true"
-
-            def _kill_deaths(kills, guard_col: str | None) -> list[str]:
-                """Per kill spec: the tick where this branch leaves the
-                reference's partialMatches via the STOP edge (NULL if
-                it doesn't) — fires only below the horizon and, for a
-                consumable branch, only if no take-able event precedes
-                the kill (ties kill: NOT(until) guards the take)."""
-                out = []
-                for flavor, kk in kills:
-                    col = _q(f"__l__to_kl_{kk}")
-                    kt = f"{col}.`__to_tick`"
-                    fired = f"{col} IS NOT NULL AND {kt} < __horizon"
-                    if flavor == "adj":
-                        fired += f" AND {col}.`__to_rid` = __lrid + 1"
-                    if guard_col is not None:
-                        fired += (
-                            f" AND ({guard_col} IS NULL OR "
-                            f"{kt} <= {guard_col})"
-                        )
-                    out.append(f"CASE WHEN {fired} THEN {kt} END")
-                return out
-
-            def _least(cands: list[str]) -> str:
-                if len(cands) == 1:
-                    return cands[0]
-                return "least(" + ", ".join(cands) + ")"
-
-            death_cands = []  # one entry per computation (primary/copy)
-            if primary[0] == "consume":
-                alive = _clear(_scan_col(primary[1]))
-            elif primary[0] == "any":
-                alive = _clear(_q("__l__to_next_any"))
-            else:
-                alive = "true"
-            alive = f"({alive} AND {_kills_clear(primary[2])})"
-            if primary[2]:
-                death_cands.append(_least(_kill_deaths(
-                    primary[2],
-                    _scan_col(primary[1])
-                    if primary[0] == "consume"
-                    else None,
-                )))
-            if copies:
-                nxt = _q("__l__to_next_any")
-                trigger = f"({nxt} IS NOT NULL AND {nxt} < __horizon)"
-                cp = "false"
-                gated = (
-                    "true"
-                    if gate is None or gate[1] is None
-                    else f"(__cnt >= {int(gate[1])})"
-                )
-                if gate is not None and len(gate) > 3 and gate[2] is not None:
-                    # dual-counter plan gate (round 14): PROCEED copies
-                    # need the current iteration's loop takes >= the
-                    # inner minimum too
-                    gated = f"({gated} AND __cnt2 >= {int(gate[3])})"
-
-                def _cgated(cond: str, cg) -> str:
-                    # per-copy gate against the plan's count column:
-                    # ("ge", n) / ("lt", n) — the iteration-count
-                    # validity of boundary/successor copies
-                    if cg is None:
-                        return cond
-                    op = ">=" if cg[0] == "ge" else "<"
-                    return f"({cond} AND __cnt {op} {int(cg[1])})"
-
-                for kind, i, kls, cg in copies:
-                    term = (
-                        trigger
-                        if kind == "fba"
-                        else f"({trigger} AND {_clear(_scan_col(i))})"
-                    )
-                    cp = (
-                        f"({cp} OR "
-                        + _cgated(f"({term} AND {_kills_clear(kls)})", cg)
-                        + ")"
-                    )
-                    if kls:
-                        death_cands.append(
-                            "CASE WHEN "
-                            + _cgated(f"({trigger} AND {gated})", cg)
-                            + " THEN "
-                            + _least(_kill_deaths(
-                                kls,
-                                None if kind == "fba" else _scan_col(i),
-                            ))
-                            + " END"
-                        )
-                if gate is not None and gate[1] is not None:
-                    cp = f"({cp} AND __cnt >= {int(gate[1])})"
-                if gate is not None and len(gate) > 3 and gate[2] is not None:
-                    cp = f"({cp} AND __cnt2 >= {int(gate[3])})"
-                alive = f"({alive} OR {cp})"
-            # event-driven expiry: a partition row at/after the horizon
-            surv = g.where(F.expr(f"__pmax >= __horizon AND {alive}"))
-            # stop-edge deaths: branches killed mid-gap stay live in
-            # the reference's partialMatches until their kill event, so
-            # they gate (but never join) the skip-emission replay
-            dead = None
-            if death_cands:
-                death = (
-                    death_cands[0]
-                    if len(death_cands) == 1
-                    else "greatest(" + ", ".join(death_cands) + ")"
-                )
-                dead = (
-                    g.withColumn("__gt", F.expr(death))
-                    .where(F.col("__gt").isNotNull())
-                    .select(*keys, "__srid", "__gt")
-                )
-            return rows, surv, dead
-
-        # one-pass plan-id consolidation (round 14, profiled in
-        # BASELINE.md round 13): with >1 prefix plans, every plan used
-        # to run its own match_recognize pass — repartition + sort +
-        # pandas scan over the SAME base relation — and the G-plan
-        # family was measured scan-dominated (q_cep_timeout_group_opt:
-        # 5 passes, ~0.72 est. scan share). All plans now run in ONE
-        # keyed shuffle via match_recognize_multi, and the shared frame
-        # is persisted because each plan's aggregation + final join
-        # reference it again (block-level cache locks make concurrent
-        # union arms compute it once). Equality with the per-plan route
-        # is pytest-pinned; the per-plan path stays as the fallback for
-        # single-plan patterns and the defensive corners below.
-        multi_rows: dict[str, DataFrame] = {}
-        full_tag = None
-        if len(plans) > 1:
-            lookahead = W.partitionBy(*keys).orderBy(*order)
-            specs: list[dict] = []
-            for pre_stages, _spans, tag, _primary, _copies, _gate in plans:
-                pre = Pattern()
-                pre._stages = pre_stages
-                pre._within = within
-                pat_p, define_p, user_p, within_p = pre.compile(
-                    emit="all", lookahead_window=lookahead
-                )
-                if pre._terminal_not is not None or any(
-                    define_p[s] is None for s in define_p
-                ):
-                    # trailing NOTs are stripped by _prefix_raw and the
-                    # batch route requires Catalyst defines, so neither
-                    # should occur — fall back to per-plan passes if a
-                    # future shape ever lands here
-                    specs = []
-                    break
-                specs.append(dict(
-                    pattern=pat_p,
-                    define=define_p,
-                    tag=tag,
-                    user_syms=list(user_p),
-                    within=within_p,
-                    iter_define=pre._iter_define or None,
-                    filler_syms=[
-                        k for k in define_p if k not in user_p
-                    ] or None,
-                    fluid_links=(
-                        list(pre._fluid_links or [])
-                        + _fluid_specs(pre_stages)
-                    ) or None,
-                    greedy_spans=list(pre._greedy_spans or []) or None,
-                ))
-            if specs and skip_mode != "no_skip" and not terminal_tn:
-                # the skip route's full-pattern sequential pass joins
-                # the consolidated shuffle (round 14, late): the
-                # separate mrows pass re-paid the repartition + sort +
-                # Arrow transfer of the SAME base relation (round-13
-                # decomposition: 3.3 s of q_cep_timeout_skip's 11.3 s
-                # at sf0.1 was that pass alone)
-                f_pat, f_def, f_usr, f_win = pattern.compile(
-                    emit="first", lookahead_window=lookahead
-                )
-                seq_enum = False
-                if pattern._fluid_links or pattern._greedy_spans:
-                    f_pat, f_def, f_usr, f_win = pattern.compile(
-                        emit="all", lookahead_window=lookahead
-                    )
-                    seq_enum = True
-                if (
-                    pattern._terminal_not is None
-                    and all(f_def[s2] is not None for s2 in f_def)
-                ):
-                    full_tag = "__full"
-                    specs.append(dict(
-                        pattern=f_pat,
-                        define=f_def,
-                        tag=full_tag,
-                        user_syms=list(f_usr),
-                        within=f_win,
-                        iter_define=pattern._iter_define or None,
-                        filler_syms=[
-                            k for k in f_def if k not in f_usr
-                        ] or None,
-                        fluid_links=list(
-                            pattern._fluid_links or []
-                        ) or None,
-                        greedy_spans=list(
-                            pattern._greedy_spans or []
-                        ) or None,
-                        after_match=self._after,
-                        seq_enum=seq_enum,
-                    ))
-            if specs:
-                from pyspark import StorageLevel
-
-                shared = match_recognize_multi(
-                    base, keys, order, specs
-                ).persist(StorageLevel.MEMORY_AND_DISK)
-                multi_rows = {
-                    s["tag"]: shared.where(
-                        F.col("__plan") == s["tag"]
-                    ).drop("__plan")
-                    for s in specs
-                }
-
-        frames = [(_timeouts(*plan), plan[2]) for plan in plans]
-
-        pruned = None
+                    for kind, ii, kls, cg in copies
+                ],
+                gate=gate,
+            ))
+        skip_spec = None
         if skip_mode != "no_skip":
-            # AfterMatchSkipStrategy: emitted matches silently discard
-            # partial branches whose start event is covered by the
-            # pruning id before their horizon (NFA.java:396-436 +
-            # aftermatch/*.java). Matches come from the SAME sequential
-            # matcher the match output uses (first-completed surviving
-            # expansion per start = the reference's earliest-completion
-            # winner among same-start candidates); the emission replay
-            # in skip_prune_verdicts handles deferred emission gated by
-            # earlier-starting never-completing partials.
-            from reshape_on_flink_spark.operators.cep import (
-                skip_prune_verdicts,
-            )
-
-            parts = None
-            for (_rows, surv, dead), _tag in frames:
-                sel = surv.select(
-                    *keys, "__srid", "__horizon", F.lit(0).alias("__gate")
+            # the FULL pattern's first-completed sequential matcher — the
+            # one the match output uses; fluid links / greedy sink guards
+            # need the enumerable grammar (enumerate + filter + min)
+            emit = "all" if (pattern._fluid_links or pattern._greedy_spans) else "first"
+            full_pat, full_def, full_usr = _flagged(pattern, emit)
+            tn_flag = None
+            if terminal_tn:
+                # pendings complete AT horizon close; the cursor needs
+                # the N predicate to kill them mid-gap
+                tnc = pattern._terminal_not or (None, None)
+                tn_flag = flags.add(
+                    tnc[0], tnc[1], "the terminal notFollowedBy condition"
                 )
-                parts = sel if parts is None else parts.unionByName(sel)
-                if dead is not None:
-                    parts = parts.unionByName(dead.select(
-                        *keys,
-                        "__srid",
-                        F.col("__gt").alias("__horizon"),
-                        F.lit(1).alias("__gate"),
-                    ))
-            # per start: gate until the LATEST-dying computation; any
-            # surviving branch (gate 0, horizon = first + within, always
-            # past every same-start kill tick) keeps the start reportable
-            parts = parts.groupBy(*keys, "__srid").agg(
-                F.max("__horizon").alias("__horizon"),
-                F.min("__gate").alias("__gate"),
+            skip_spec = dict(
+                mode=skip_mode,
+                sym=skip_sym,
+                pat=full_pat,
+                define=full_def,
+                user_syms=full_usr,
+                tn=tn_flag,
+                fluid=list(pattern._fluid_links or []) or None,
+                greedy=list(pattern._greedy_spans or []) or None,
+                iter_define=pattern._iter_define or None,
             )
-            mrows = (
-                multi_rows.get(full_tag) if full_tag is not None else None
-            )
-            if mrows is None:
-                mrows = PatternStream(
-                    base, pattern, keys, order, self._after
-                ).flat_select()
-            if skip_mode == "past_last_row":
-                prid = F.max("__to_rid")
-            elif skip_mode == "to_next_row":
-                prid = F.min("__to_rid")
-            elif skip_mode == "to_first":
-                prid = F.min(
-                    F.when(F.col("matched_symbol") == skip_sym, F.col("__to_rid"))
-                )
-            else:  # to_last
-                prid = F.max(
-                    F.when(F.col("matched_symbol") == skip_sym, F.col("__to_rid"))
-                )
-            # terminal notFollowedBy: the match is a pending branch that
-            # completes AT horizon close (advanceTime turns the timed-out
-            # pending into a potential match), not at its last row
-            etick = (
-                F.min(F.struct("__to_rid", "__to_tick"))["__to_tick"]
-                + F.lit(delta)
-                if terminal_tn
-                else F.max(F.struct("__to_rid", "__to_tick"))["__to_tick"]
-            )
-            msum = (
-                mrows.groupBy(*keys, "match_id")
-                .agg(
-                    F.min("__to_rid").alias("__srid"),
-                    etick.alias("__etick"),
-                    prid.alias("__prid"),
-                )
-                .drop("match_id")
-            )
-            ev = base.select(
-                *keys,
-                F.col("__to_rid").alias("__rid"),
-                F.col("__to_tick").alias("__tick"),
-            )
-            pruned = skip_prune_verdicts(
-                ev, msum, parts, keys,
-                strict=skip_mode in ("to_first", "to_last"),
-            )
-
-        ts = (
-            F.timestamp_micros(F.col("__horizon").cast("long"))
-            if is_time
-            else F.col("__horizon")
+        return timed_out_partials(
+            self._df, keys, order, list(self._df.columns), op_plans, flags,
+            delta, is_time, skip=skip_spec,
         )
-        outs = []
-        for (rows, surv, _dead), tag in frames:
-            if pruned is not None:
-                surv = surv.join(pruned, [*keys, "__srid"], "left_anti")
-            out = rows.join(
-                surv.select(*keys, "match_id", "__horizon"),
-                [*keys, "match_id"],
-                "inner",
-            )
-            outs.append(
-                out.select(
-                    *user_cols,
-                    F.regexp_replace(
-                        F.col("matched_symbol"), "__gq$", ""
-                    ).alias("matched_symbol"),
-                    F.concat_ws(
-                        "#", F.lit(tag), F.col("match_id").cast("string")
-                    ).alias("timeout_id"),
-                    ts.alias("timeout_ts"),
-                    F.col("__to_rid").alias("__dd_rid"),
-                )
-            )
-        res = outs[0]
-        for o in outs[1:]:
-            res = res.unionByName(o)
-        if overlap_dedup:
-            # set-level collapse across plans (see overlap_dedup above):
-            # one reported partial per (keys, event set) — the rid makes
-            # the signature tie-proof, stripped symbols ride along so
-            # distinct assignments over the same rows stay distinct only
-            # if they differ in labeling (they cannot: same conditions)
-            sigs = res.groupBy(*keys, "timeout_id").agg(
-                F.sha2(
-                    F.concat_ws(
-                        ",",
-                        F.sort_array(F.collect_list(F.concat_ws(
-                            ":",
-                            F.col("__dd_rid").cast("string"),
-                            F.col("matched_symbol"),
-                        ))),
-                    ),
-                    256,
-                ).alias("__dd_sig"),
-            )
-            win = (
-                sigs.withColumn(
-                    "__dd_rn",
-                    F.row_number().over(
-                        SW.partitionBy(*keys, "__dd_sig").orderBy(
-                            "timeout_id"
-                        )
-                    ),
-                )
-                .where(F.col("__dd_rn") == 1)
-                .select(*keys, "timeout_id")
-            )
-            res = res.join(win, [*keys, "timeout_id"], "left_semi")
-        return res.drop("__dd_rid")
 
     def select(self, **measures: Column) -> DataFrame:
         """ONE ROW PER MATCH: key columns + match_id + the given

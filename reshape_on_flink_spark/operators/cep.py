@@ -38,6 +38,12 @@ Spark-first split of work:
    overlap. Output = matched rows + (match_id, matched_symbol); MEASURES
    are then ordinary Spark aggregations over match_id — keeping the
    aggregation JVM-side instead of hiding it in Python.
+3. **Timed-out partial matches** (the CEP side output) run on ONE
+   per-key decision core, :func:`_decide_timeouts`, for bounded and
+   unbounded input alike (:func:`timed_out_partials`): bounded input
+   in one keyed ``mapInPandas`` stage over JVM flag columns, streams in
+   ``applyInPandasWithState`` over pandas predicates. Like the matcher,
+   the core only walks boolean arrays.
 
 100 TB design: one shuffle on the partition key (same as any keyed op);
 state is bounded by a single key's rows in one Arrow batch. Skewed keys
@@ -49,6 +55,7 @@ by semantics, as in Flink).
 from __future__ import annotations
 
 import re
+from bisect import bisect_left
 
 import numpy as np
 from pyspark.sql import Column, DataFrame
@@ -969,6 +976,44 @@ def _build_ic(pdf, symbols: list[str], n_cols: int, iter_define,
     return ic
 
 
+def _key_chunks(batches, part_cols):
+    """Re-chunk key-sorted Arrow batches into ``(pdf, starts)`` pieces
+    holding only COMPLETE keys: ``starts`` are the first-row offsets of
+    each key inside ``pdf``. The last key of a batch may continue into
+    the next one, so it is carried over; memory is bounded by one batch
+    plus the largest single key's rows."""
+    import pandas as pd
+
+    carry = None
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        if carry is not None:
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+            carry = None
+        else:
+            pdf = pdf.reset_index(drop=True)
+        keys = pdf[part_cols]
+        shifted = keys.shift()
+        # null-aware boundary: NaN != NaN is True, so a plain != would
+        # split a run of null-keyed rows into per-row groups — Spark's
+        # groupBy treats null as one key, match it
+        boundary = (
+            ((keys != shifted) & ~(keys.isna() & shifted.isna()))
+            .any(axis=1)
+            .to_numpy()
+        )
+        boundary[0] = True
+        starts = np.flatnonzero(boundary)
+        last_start = int(starts[-1])
+        carry = pdf.iloc[last_start:]
+        if last_start == 0:
+            continue
+        yield pdf.iloc[:last_start], starts[:-1]
+    if carry is not None and len(carry):
+        yield carry.reset_index(drop=True), np.array([0])
+
+
 def match_recognize(
     df: DataFrame,
     partition_by: str | list[str],
@@ -1396,429 +1441,14 @@ def match_recognize(
         return out
 
     def run_chunks(batches):
-        import pandas as pd
-
-        carry = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            else:
-                pdf = pdf.reset_index(drop=True)
-            keys = pdf[part_cols]
-            shifted = keys.shift()
-            # null-aware boundary: NaN != NaN is True, so a plain != would
-            # split a run of null-keyed rows into per-row groups — grouped
-            # mode (Spark groupBy) treats null as one key, match it
-            boundary = (
-                ((keys != shifted) & ~(keys.isna() & shifted.isna()))
-                .any(axis=1)
-                .to_numpy()
-            )
-            boundary[0] = True
-            starts = np.flatnonzero(boundary)
-            # the last key may continue into the next Arrow batch: carry it
-            last_start = int(starts[-1])
-            carry = pdf.iloc[last_start:]
-            if last_start == 0:
-                continue
-            out = scan_chunk(pdf.iloc[:last_start], starts[:-1])
-            if out is not None:
-                yield out
-        if carry is not None and len(carry):
-            out = scan_chunk(carry.reset_index(drop=True), np.array([0]))
+        for pdf, starts in _key_chunks(batches, part_cols):
+            out = scan_chunk(pdf, starts)
             if out is not None:
                 yield out
 
     # keys are hash-partitioned and made contiguous + ordered within
     # partitions, so no per-key pandas sort is needed; memory is bounded
     # by one Arrow batch + the largest single key's rows (the carry)
-    from reshape_on_flink_spark.session import (
-        PYTHON_STAGE_TASK_BYTES,
-        repartition_for_python_stage,
-    )
-
-    sorted_df = repartition_for_python_stage(
-        flagged, part_cols, task_bytes=PYTHON_STAGE_TASK_BYTES
-    ).sortWithinPartitions(*part_cols, *order_by)
-    return sorted_df.mapInPandas(run_chunks, schema=schema_out)
-
-
-def match_recognize_multi(
-    df: DataFrame,
-    partition_by: str | list[str],
-    order_by: str | list[str],
-    plans: list[dict],
-) -> DataFrame:
-    """N ``no_skip`` enumeration passes in ONE keyed shuffle.
-
-    Motivation (BASELINE.md round-13 pass-count profile): the timeout
-    side output's prefix plans each ran a full ``match_recognize`` pass
-    — repartition + sort + the pandas scan — over the SAME base
-    relation, and the G-plan family was measured scan-DOMINATED
-    (q_cep_timeout_group_opt: 5 passes, ~0.72 estimated scan share).
-    This runs every plan inside one ``repartition(keys) +
-    sortWithinPartitions + mapInPandas`` stage, tagging output rows
-    with ``__plan``, so the base computation, shuffle, sort and Arrow
-    transfer are paid once regardless of plan count. At cluster scale
-    the saving compounds: one wide shuffle of the event relation
-    instead of one per parked-branch shape.
-
-    Each plan dict: ``pattern`` (string), ``define`` (symbol ->
-    Catalyst Column), ``tag`` (the ``__plan`` value), ``user_syms``
-    (symbols kept in the output — ``flat_select``'s filter, applied at
-    emission time), plus optional ``within`` / ``iter_define`` /
-    ``filler_syms`` / ``fluid_links`` / ``greedy_spans`` with
-    :func:`match_recognize` semantics.
-
-    Contract (pinned by ``test_cep_multi_pass_equals_singles``): for
-    every plan, the rows with ``__plan == tag`` equal
-    ``match_recognize(df, keys, order, pattern, define,
-    after_match=<plan's>, ...)`` filtered to ``user_syms`` — the multi
-    pass is a scheduling change only. Plans default to the ``no_skip``
-    enumeration route (timeout prefixes always run ``no_skip`` with
-    trailing NOT stages stripped upstream); a plan may instead carry
-    ``after_match`` (a single-match skip strategy — round 14, late:
-    the skip route's full-pattern pass rides the consolidated
-    shuffle) with ``seq_enum=True`` when its pattern was compiled
-    ``emit='all'`` (fluid links / greedy spans force the
-    enumerate+min first-completed route). ``terminal_not`` is not
-    supported — those patterns keep their dedicated pass.
-    """
-    partition_by = (
-        [partition_by] if isinstance(partition_by, str) else list(partition_by)
-    )
-    order_by = [order_by] if isinstance(order_by, str) else list(order_by)
-
-    compiled = []
-    flag_cols: list = []  # (name, Column) — appended in ONE select below
-    for j, p in enumerate(plans):
-        pattern = p["pattern"]
-        define = dict(p["define"])
-        iter_define = dict(p["iter_define"]) if p.get("iter_define") else None
-        if _is_flat(pattern):
-            toks = parse_pattern(pattern)
-            symbols = pattern_symbols(toks)
-            ast = _flat_to_ast(toks)
-        else:
-            ast = parse_pattern_ast(pattern)
-            symbols = ast_symbols(ast)
-        if iter_define:
-            unknown = [s for s in iter_define if s not in symbols]
-            if unknown:
-                raise ValueError(
-                    f"iter_define for symbols not in the pattern: {unknown}"
-                )
-            define = {
-                **{s: F.lit(True) for s in iter_define if s not in define},
-                **define,
-            }
-        missing = [s for s in symbols if s not in define]
-        if missing:
-            raise ValueError(f"pattern symbols without DEFINE: {missing}")
-        only_pandas = [s for s in symbols if define[s] is None]
-        if only_pandas:
-            raise ValueError(
-                f"batch CEP needs Catalyst conditions; stages "
-                f"{only_pandas} have only pandas predicates"
-            )
-        fluid_links = list(p.get("fluid_links") or []) or None
-        greedy_spans = list(p.get("greedy_spans") or []) or None
-        filler_idx = frozenset(
-            symbols.index(s) for s in (p.get("filler_syms") or ()) if s in symbols
-        )
-        user_set = set(p["user_syms"])
-        sym_cols = [f"__p{j}_{s}" for s in symbols]
-        for s, c in zip(symbols, sym_cols):
-            flag_cols.append((c, F.coalesce(define[s], F.lit(False))))
-        after_match = p.get("after_match", "no_skip")
-        skip = _parse_after_match(after_match, symbols)
-        compiled.append(
-            dict(
-                tag=str(p["tag"]),
-                symbols=symbols,
-                sym_cols=sym_cols,
-                # per-plan rename so _IterCtx row dicts expose the
-                # __sym_{name} static flags the compiler's iterative
-                # filler lambdas read (e.get(f"__sym_{name}", True))
-                ren={c: f"__sym_{s}" for s, c in zip(symbols, sym_cols)},
-                enum_at=_ast_enumerator(symbols, ast),
-                # single-match plans (round 14, late — the skip route's
-                # full-pattern pass rides the consolidated shuffle):
-                # the sequential cursor resumes by the skip strategy;
-                # the backtracking matcher serves plans whose compile
-                # is emit='first' (seq_enum False), enumerate+min the
-                # fluid/greedy ones (first-completed survivor)
-                skip=skip,
-                match_at=(
-                    _ast_matcher(symbols, ast)
-                    if skip[0] != "no_skip" else None
-                ),
-                seq_enum=bool(p.get("seq_enum")),
-                rx=_bitmask_regex(symbols, ast),
-                first_idx=_first_idx_ast(symbols, ast),
-                fl_idx=(
-                    _fluid_index(symbols) if (fluid_links or greedy_spans) else None
-                ),
-                filler_idx=filler_idx,
-                fluid_links=fluid_links,
-                greedy_spans=greedy_spans,
-                iter_define=iter_define,
-                within=p.get("within"),
-                user_idx=frozenset(
-                    i for i, s in enumerate(symbols) if s in user_set
-                ),
-            )
-        )
-
-    # ONE select instead of one withColumn per symbol per plan: each
-    # withColumn rebuilds (and re-analyzes) the whole logical plan, so a
-    # 5-plan x 6-symbol timeout family paid ~30 plan rebuilds of driver
-    # wall per query build (guide §7.3 — measured: q_cep_timeout_group_*
-    # spent 1.4-3.8 s, ~half the query, in DataFrame construction).
-    flagged = df.select(
-        "*", *[col.alias(c) for c, col in flag_cols]
-    ) if flag_cols else df
-
-    out_fields = list(df.schema.fields)
-    data_cols = [f.name for f in out_fields]
-    schema_out = (
-        ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in out_fields)
-        + ", match_id bigint, matched_symbol string, __plan string"
-    )
-
-    def scan_chunk(pdf, starts):
-        import pandas as pd
-
-        n = len(pdf)
-        G = len(starts)
-        ends = np.append(starts[1:], n)
-        frames = []
-        for pl in compiled:
-            bools = [pdf[c].to_numpy() for c in pl["sym_cols"]]
-            if pl["iter_define"]:
-                ic = _build_ic(
-                    pdf.rename(columns=pl["ren"]),
-                    pl["symbols"],
-                    len(pl["symbols"]),
-                    pl["iter_define"],
-                    order_by[0],
-                )
-            else:
-                ic = None
-            if pl["within"] is not None:
-                tv, is_time = _time_axis(pdf, order_by[0])
-                delta = _within_delta(pl["within"], is_time)
-
-                def bound(i: int, hi: int, tv=tv, delta=delta) -> int:
-                    return min(
-                        hi,
-                        i
-                        + int(
-                            np.searchsorted(
-                                tv[i:hi], tv[i] + delta, side="left"
-                            )
-                        ),
-                    )
-            else:
-                bound = lambda i, hi: hi  # noqa: E731
-            rows_idx: list = []
-            match_ids: list = []
-            matched_syms: list = []
-            mids = np.zeros(G, dtype=np.int64)
-            symbols = pl["symbols"]
-            enum_at = pl["enum_at"]
-            filler_idx = pl["filler_idx"]
-            user_idx = pl["user_idx"]
-
-            def handle(r: int, g: int) -> None:
-                hi = bound(r, int(ends[g]))
-                cands = enum_at(bools, r, hi, ic)
-                if filler_idx:  # drop filler-anchored candidates + dedup
-                    cands = [m for m in cands if m[0][1] not in filler_idx]
-                    seen_u, uniq = set(), []
-                    for mm_ in cands:
-                        ku = tuple(rr for rr in mm_ if rr[1] not in filler_idx)
-                        if ku not in seen_u:
-                            seen_u.add(ku)
-                            uniq.append(mm_)
-                    cands = uniq
-                if pl["fluid_links"]:
-                    cands = [
-                        m
-                        for m in cands
-                        if _fluid_ok(m, bools, pl["fl_idx"], pl["fluid_links"])
-                    ]
-                if pl["greedy_spans"]:
-                    cands = [
-                        m
-                        for m in cands
-                        if _greedy_ok(
-                            m, bools, pl["fl_idx"], pl["greedy_spans"],
-                            filler_idx,
-                        )
-                    ]
-                for m in cands:
-                    for pos, si in m:
-                        if si in user_idx:
-                            rows_idx.append(pos)
-                            match_ids.append(int(mids[g]))
-                            matched_syms.append(symbols[si])
-                    mids[g] += 1
-
-            skip_mode, skip_sym = pl["skip"]
-
-            def seq_match(r: int, g: int):
-                """Single-match candidate at start r — the sequential
-                route's first-completed survivor (enumerate+min for
-                fluid/greedy emit='all' compiles, the backtracking
-                matcher otherwise), pinned equal to match_recognize by
-                test_cep_multi_sequential_equals_single."""
-                hi = bound(r, int(ends[g]))
-                if pl["seq_enum"]:
-                    cands = enum_at(bools, r, hi, ic)
-                    if filler_idx:
-                        cands = [
-                            m for m in cands if m[0][1] not in filler_idx
-                        ]
-                    if pl["fluid_links"]:
-                        cands = [
-                            m for m in cands
-                            if _fluid_ok(m, bools, pl["fl_idx"],
-                                         pl["fluid_links"])
-                        ]
-                    if pl["greedy_spans"]:
-                        cands = [
-                            m for m in cands
-                            if _greedy_ok(m, bools, pl["fl_idx"],
-                                          pl["greedy_spans"], filler_idx)
-                        ]
-                    if not cands:
-                        return None
-                    return min(
-                        cands,
-                        key=lambda mm: (len(mm), [p2 for p2, _ in mm]),
-                    )
-                m = pl["match_at"](bools, r, hi, ic)
-                if m and filler_idx and m[0][1] in filler_idx:
-                    return None  # filler-anchored: re-found later
-                return m
-
-            def emit_m(m, g: int) -> None:
-                for pos, si in m:
-                    if si in user_idx:
-                        rows_idx.append(pos)
-                        match_ids.append(int(mids[g]))
-                        matched_syms.append(symbols[si])
-                mids[g] += 1
-
-            rx = pl["rx"]
-            if rx is not None and n:
-                acc = np.zeros(n, dtype=np.int32)
-                for b, col in enumerate(bools):
-                    acc += np.asarray(col, dtype=np.int32) << b
-                acc += _RX_BASE
-                s_all = "".join(map(chr, acc.tolist()))
-                sep = chr(_RX_BASE)  # bitmask 0: in no symbol class
-                enc = sep.join(
-                    s_all[s:e] for s, e in zip(starts.tolist(), ends.tolist())
-                )
-                group_strstart = starts + np.arange(G)
-                i, L = 0, len(enc)
-                while i < L:
-                    mm = rx.search(enc, i)
-                    if not mm:
-                        break
-                    if mm.end() == mm.start():  # empty match: advance
-                        i = mm.start() + 1
-                        continue
-                    sp = mm.start()
-                    g = int(
-                        np.searchsorted(group_strstart, sp, side="right") - 1
-                    )
-                    if skip_mode == "no_skip":
-                        handle(sp - g, g)
-                        i = sp + 1
-                        continue
-                    m = seq_match(sp - g, g)
-                    if not m:
-                        i = sp + 1
-                        continue
-                    emit_m(m, g)
-                    i = _resume_pos(m, skip_mode, skip_sym, symbols) + g
-            elif n:
-                can_start = np.logical_or.reduce(
-                    [np.asarray(bools[jj], dtype=bool) for jj in pl["first_idx"]]
-                )
-                if skip_mode == "no_skip":
-                    for g in range(G):
-                        for r in range(int(starts[g]), int(ends[g])):
-                            if can_start[r]:
-                                handle(r, g)
-                else:
-                    for g in range(G):
-                        r = int(starts[g])
-                        while r < int(ends[g]):
-                            if not can_start[r]:
-                                r += 1
-                                continue
-                            m = seq_match(r, g)
-                            if not m:
-                                r += 1
-                                continue
-                            emit_m(m, g)
-                            r = _resume_pos(m, skip_mode, skip_sym, symbols)
-            if rows_idx:
-                out = pdf.iloc[rows_idx][data_cols].copy()
-                out["match_id"] = pd.Series(
-                    match_ids, index=out.index, dtype="int64"
-                )
-                out["matched_symbol"] = pd.Series(
-                    matched_syms, index=out.index
-                )
-                out["__plan"] = pl["tag"]
-                frames.append(out)
-        if not frames:
-            return None
-        return pd.concat(frames, ignore_index=True)
-
-    part_cols = list(partition_by)
-
-    def run_chunks(batches):
-        import pandas as pd
-
-        carry = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            else:
-                pdf = pdf.reset_index(drop=True)
-            keys = pdf[part_cols]
-            shifted = keys.shift()
-            boundary = (
-                ((keys != shifted) & ~(keys.isna() & shifted.isna()))
-                .any(axis=1)
-                .to_numpy()
-            )
-            boundary[0] = True
-            starts = np.flatnonzero(boundary)
-            last_start = int(starts[-1])
-            carry = pdf.iloc[last_start:]
-            if last_start == 0:
-                continue
-            out = scan_chunk(pdf.iloc[:last_start], starts[:-1])
-            if out is not None:
-                yield out
-        if carry is not None and len(carry):
-            out = scan_chunk(carry.reset_index(drop=True), np.array([0]))
-            if out is not None:
-                yield out
-
     from reshape_on_flink_spark.session import (
         PYTHON_STAGE_TASK_BYTES,
         repartition_for_python_stage,
@@ -2428,68 +2058,711 @@ def streaming_match_recognize(
     )
 
 
-def streaming_timed_out_partials(
+class TimeoutFlags:
+    """Every predicate the timeout decision core reads, registered once
+    as a ``(Catalyst, pandas)`` pair and addressed by integer id. The
+    core never evaluates a predicate: the bounded harness computes the
+    Catalyst forms as JVM flag columns in ONE select, the streaming
+    harness evaluates the pandas forms on each key's buffered rows.
+    Pairs are deduplicated by object identity, so a stage condition
+    shared by several plans is evaluated once."""
+
+    def __init__(self) -> None:
+        self.specs: list[tuple] = []  # (catalyst, pandas, what)
+        self._ids: dict = {}
+
+    def add(self, cond, pcond, what: str, *, true_if_missing=False) -> int:
+        """Id of the flag for ``cond``/``pcond``. With neither form, a
+        ``true_if_missing`` flag is constant TRUE (an unconditioned or
+        iterative-only take: the static part admits every event)."""
+        if cond is None and pcond is None:
+            if not true_if_missing:
+                raise ValueError(f"{what} has neither a Catalyst nor a pandas form")
+            key = "true"
+            cond, pcond = F.lit(True), _all_true
+        else:
+            key = (id(cond), id(pcond))
+        fid = self._ids.get(key)
+        if fid is None:
+            fid = self._ids[key] = len(self.specs)
+            self.specs.append((cond, pcond, what))
+        return fid
+
+
+def _all_true(pdf):
+    return np.ones(len(pdf), dtype=bool)
+
+
+def _bool_arr(v) -> np.ndarray:
+    return np.asarray(v.to_numpy() if hasattr(v, "to_numpy") else v, dtype=bool)
+
+
+def _next_true(arr) -> list[int]:
+    """``out[i]`` = the first position >= i where ``arr`` is true, or
+    ``len(arr)``; one entry longer than ``arr``."""
+    n = len(arr)
+    idx = np.where(arr, np.arange(n), n)
+    return np.minimum.accumulate(idx[::-1])[::-1].tolist() + [n]
+
+
+def _kill_pos(kls, j: int, lim: int):
+    """Earliest stop-edge position in the gap (j, lim) of a branch whose
+    last take is row ``j``, or None. ``kls``: (flavor, next-true list)
+    pairs — a 'gap' kill fires on ANY matching event in the gap, an
+    'adj' kill (not_next) only on the FIRST gap event."""
+    best = None
+    for fl, knt in kls:
+        p2 = knt[j + 1]
+        if p2 >= lim or (fl != "gap" and p2 != j + 1):
+            continue
+        best = p2 if best is None else min(best, p2)
+    return best
+
+
+def _count_ok(cg, cnt: int) -> bool:
+    """Per-copy iteration-count gate: ("ge", n) / ("lt", n) / None."""
+    if cg is None:
+        return True
+    return cnt >= cg[1] if cg[0] == "ge" else cnt < cg[1]
+
+
+def _compile_timeout_plans(plans: list[dict], skip: dict | None):
+    """Parse each plan's prefix pattern (and the skip route's full
+    pattern) once per query; the per-key core reuses the result."""
+    compiled = []
+    for pl in plans:
+        ast = parse_pattern_ast(pl["pat"])
+        symbols = ast_symbols(ast)
+        missing = [s for s in symbols if s not in pl["define"]]
+        if missing:
+            raise ValueError(f"timeout prefix symbols without DEFINE: {missing}")
+        user = set(pl["user_syms"])
+        fluid, greedy = pl.get("fluid"), pl.get("greedy")
+        compiled.append(dict(
+            pl,
+            symbols=symbols,
+            sym_flags=[pl["define"][s] for s in symbols],
+            enum_at=_ast_enumerator(symbols, ast),
+            rx=_bitmask_regex(symbols, ast),
+            first_idx=_first_idx_ast(symbols, ast),
+            user=user,
+            flidx=_fluid_index(symbols) if (fluid or greedy) else None,
+            fillers=(
+                frozenset(i for i, s in enumerate(symbols) if s not in user)
+                if greedy else frozenset()
+            ),
+        ))
+    if skip is None:
+        return compiled, None
+    if skip["mode"] not in ("past_last_row", "to_next_row", "to_first", "to_last"):
+        raise NotImplementedError(f"timeout skip mode {skip['mode']!r} is unknown")
+    f_ast = parse_pattern_ast(skip["pat"])
+    f_syms = ast_symbols(f_ast)
+    missing = [s for s in f_syms if s not in skip["define"]]
+    if missing:
+        raise ValueError(f"skip full-pattern symbols without DEFINE: {missing}")
+    f_user = set(skip["user_syms"])
+    f_enum = bool(skip.get("fluid") or skip.get("greedy"))
+    return compiled, dict(
+        skip,
+        symbols=f_syms,
+        sym_flags=[skip["define"][s] for s in f_syms],
+        # a FLUID full pattern (optional-tail group loop) or a greedy
+        # sink guard needs the enumerate+filter route: the sequential
+        # matcher's single candidate may be an over-admitted link
+        # expansion / a guarded jump
+        enum=f_enum,
+        match_at=(
+            _ast_enumerator(f_syms, f_ast) if f_enum
+            else _ast_matcher(f_syms, f_ast)
+        ),
+        fillers=frozenset(j for j, s in enumerate(f_syms) if s not in f_user),
+        flidx=_fluid_index(f_syms) if f_enum else None,
+    )
+
+
+def _new_skip_aux() -> dict:
+    return {
+        "rid_base": 0,
+        "cursor": 0,
+        "prev_emit": float("-inf"),
+        "gates": [],      # (start_rid, horizon) of reported starts
+        "emissions": [],  # (emit_tick, prune_rid)
+    }
+
+
+def _decide_timeouts(ticks, flag, frame, frontier, delta, compiled, skip_c,
+                     aux, order_col):
+    """The timeout decision core for ONE key: state-free, shared by the
+    bounded and the streaming harness.
+
+    ``ticks``: the key's rows' order ticks, ascending; ``flag(j)``: the
+    bool array of registered predicate ``j`` over those rows
+    (:class:`TimeoutFlags`); ``frame()``: the rows as a DataFrame, only
+    called for iterative conditions; ``frontier``: starts at/below this
+    tick were decided by an earlier call; ``aux``: the skip route's
+    carry (``None`` for a fresh key), updated in place.
+
+    A start row is DECIDED once the key holds a row at/after ``start +
+    within`` — the event-driven ``NFA.advanceTime`` witness. Returns
+    ``(emits, n_done)``: ``emits`` = ``[(tag, horizon, rows)]`` in
+    plan-major order, ``rows`` = ``[(pos, symbol)]``; the first
+    ``n_done`` rows can no longer start or witness anything undecided
+    and may be dropped from the carry."""
+    n = len(ticks)
+    f_new = (float(ticks[-1]) if n else float("-inf")) - delta
+    lo = int(np.searchsorted(ticks, frontier, side="right"))
+    n_done = int(np.searchsorted(ticks, f_new, side="right"))
+    dec = np.arange(lo, n_done)
+    if skip_c is not None and aux is None:
+        aux = _new_skip_aux()
+    tick_l = ticks.tolist()
+    nt_cache: dict = {}
+
+    def nt(j):
+        """Next-true list of flag ``j``: the first position >= i where
+        it holds, for every i (``n`` when none) — an O(1) answer to
+        'is there a matching event in the gap (last take, horizon)'."""
+        out = nt_cache.get(j)
+        if out is None:
+            out = nt_cache[j] = _next_true(flag(j))
+        return out
+
+    # phase 1: enumerate the surviving parked branches per decided
+    # start (NFA ignore-condition survival — independent of skip
+    # pruning), in plan-major order
+    cands: list = []  # (tag, local start idx, horizon, rows)
+    surv_starts: set = set()
+    # start idx -> latest stop-edge death tick among its killed
+    # branches: a branch killed mid-gap by until()/NOT gates later
+    # matches' emissions until its kill event (it is live in the
+    # reference's partialMatches until then), even though it never
+    # reaches the timeout output itself
+    dead_gates: dict = {}
+    for pl in compiled if len(dec) else ():
+        symbols = pl["symbols"]
+        bools = [flag(j) for j in pl["sym_flags"]]
+        starts = _candidate_starts(pl, bools, lo, n_done)
+        if not starts:
+            continue
+        enum_at, user = pl["enum_at"], pl["user"]
+        prim, copies, gate = pl["primary"], pl["copies"], pl["gate"]
+        pl_ic = None
+        if pl.get("iter_define"):
+            # event dicts must carry the __sym static flags: the
+            # compiler's iterative FILLER conditions read a sibling
+            # symbol's static verdict off the row
+            # (e.get(f"__sym_{name}", True)) — without the column the
+            # permissive default drops the static part
+            fr2 = frame().copy()
+            for s_name, arr in zip(symbols, bools):
+                fr2[f"__sym_{s_name}"] = arr
+            pl_ic = _build_ic(fr2, symbols, len(symbols), pl["iter_define"], order_col)
+        prim_kind, prim_it = prim[0], prim[3]
+        prim_nt = nt(prim[1]) if prim_kind == "consume" else None
+        # iterative scans: evaluated per branch against its own partial
+        # match (IterativeCondition.Context over the branch's takes)
+        it_ctx = None
+        if prim_it is not None or any(c[4] is not None for c in copies):
+            it_ctx = _IterCtx(
+                frame().to_dict("records"),
+                [s[:-4] if s.endswith("__gq") else s for s in symbols],
+                order_col,
+            )
+
+        def _first_take(tnt, itfn, j, lim, taken):
+            """First consuming take in the gap (j, lim): the static flag
+            AND, for iterative scans, the IterativeCondition over THIS
+            branch's taken rows; None when the gap holds none."""
+            p2 = tnt[j + 1]
+            if itfn is not None:
+                it_ctx.taken = tuple(taken)
+                while p2 < lim:
+                    it_ctx.pos = p2
+                    if itfn(it_ctx.records[p2], it_ctx):
+                        break
+                    p2 = tnt[p2 + 1]
+            return p2 if p2 < lim else None
+
+        def _note_death(ii, kls, j, lim, take_nt, itfn, match):
+            # record the branch's stop-edge death tick for the
+            # emission-gate list: fires only if the kill precedes the
+            # event that would otherwise consume the branch
+            kp = _kill_pos(kls, j, lim)
+            if kp is None:
+                return
+            if take_nt is not None:
+                tk = _first_take(take_nt, itfn, j, lim, match)
+                if tk is not None and tk < kp:
+                    return
+            if tick_l[kp] > dead_gates.get(ii, float("-inf")):
+                dead_gates[ii] = tick_l[kp]
+
+        prim_kills = [(fl, nt(j)) for fl, j in prim[2]]
+        pl_fluid, pl_greedy, pl_flidx = pl.get("fluid"), pl.get("greedy"), pl["flidx"]
+        sp_nts = [
+            (mode, gname, post, nt(j)) for mode, gname, post, j in pl.get("spans", ())
+        ]
+        cp_nts = [
+            (kind, None if j is None else nt(j),
+             [(fl, nt(kj)) for fl, kj in kls], cg, itfn)
+            for kind, j, kls, cg, itfn in copies
+        ]
+        gsyms = g2 = None
+        if gate is not None:
+            gsyms = gate[0] if isinstance(gate[0], (tuple, list, set)) else (gate[0],)
+            if len(gate) > 3 and gate[2] is not None:
+                g2 = set(gate[2])
+        for ii in starts:
+            h = tick_l[ii] + delta
+            lim = bisect_left(tick_l, h, ii)
+            seen: set = set()
+            for match in enum_at(bools, ii, lim, pl_ic):
+                if pl_fluid and not _fluid_ok(match, bools, pl_flidx, pl_fluid):
+                    continue
+                # greedy inner-loop sink guard: per-run span filter
+                if pl_greedy and not _greedy_ok(
+                    match, bools, pl_flidx, pl_greedy, pl["fillers"]
+                ):
+                    continue
+                rows = sorted(
+                    (pos, symbols[si]) for pos, si in match if symbols[si] in user
+                )
+                if not rows:
+                    continue
+                kset = frozenset(rows)
+                if kset in seen:  # filler splits of one partial
+                    continue
+                seen.add(kset)
+                # interior-greedy span kills: the de-greedy'd prefix
+                # enumerates every expansion; drop those with a
+                # greedy-take-able event in (anchor, next taken row] —
+                # the sink guard. 'g' mode anchors on the last greedy
+                # row (zero-take exempt: unbounded optional loops guard
+                # only the loop's sink COPY); 'anchor' mode on the last
+                # pre-post row (bounded times guard the original)
+                bad = False
+                for mode, gname, post, sp_nt in sp_nts:
+                    if mode == "g":
+                        gp = [p2 for p2, s2 in rows if s2 == gname]
+                        if not gp:
+                            continue
+                        anchor = gp[-1]
+                    else:
+                        anchor = max(p2 for p2, s2 in rows if s2 not in post)
+                    nxt = min(p2 for p2, _s2 in rows if p2 > anchor)
+                    if sp_nt[anchor + 1] <= nxt:
+                        bad = True
+                        break
+                if bad:
+                    continue
+                j = rows[-1][0]
+                gap_any = lim > j + 1
+                if prim_kind == "persist":
+                    alive = True
+                elif prim_kind == "any":
+                    alive = not gap_any
+                else:
+                    alive = _first_take(prim_nt, prim_it, j, lim, match) is None
+                if alive and prim_kills:
+                    alive = _kill_pos(prim_kills, j, lim) is None
+                if skip_c is not None and prim_kills:
+                    _note_death(ii, prim_kills, j, lim, prim_nt, prim_it, match)
+                gated = True
+                cnt = 0
+                if gate is not None:
+                    cnt = sum(1 for _p, s2 in rows if s2 in gsyms)
+                    if gate[1] is not None:
+                        gated = cnt >= gate[1]
+                    if g2 is not None:
+                        # dual-counter gate (bounded inner loops):
+                        # current-iteration loop takes must reach the
+                        # inner minimum for PROCEED copies to exist
+                        gated = gated and sum(
+                            1 for _p, s2 in rows if s2 in g2
+                        ) >= gate[3]
+                if gap_any and gated:
+                    for kind, c_nt, kls, cg, it2 in cp_nts:
+                        if not _count_ok(cg, cnt):
+                            continue
+                        if not alive and (
+                            (kind == "fba"
+                             or _first_take(c_nt, it2, j, lim, match) is None)
+                            and _kill_pos(kls, j, lim) is None
+                        ):
+                            alive = True
+                            if skip_c is None:
+                                break
+                        if skip_c is not None and kls:
+                            _note_death(
+                                ii, kls, j, lim, None if kind == "fba" else c_nt,
+                                it2, match,
+                            )
+                if not alive:
+                    continue
+                cands.append((pl["tag"], ii, h, rows))
+                surv_starts.add(ii)
+
+    # phase 2 (skip strategies): incremental sequential matcher +
+    # emission replay + per-start prune verdicts. Only starts with
+    # SURVIVING branches enter the gate list — a start whose branches
+    # all die by consumption stops gating in the reference too (its
+    # deferral never crosses a later start's horizon).
+    pruned_starts: set = set()
+    if skip_c is not None and n and len(dec):
+        pruned_starts = _skip_prune(
+            ticks, flag, frame, f_new, delta, dec, surv_starts, dead_gates,
+            skip_c, aux, order_col,
+        )
+
+    # phase 3: the unpruned partials in plan-major order. Computations
+    # sharing an event set collapse to ONE reported partial (NFAITCase
+    # compares sets) — plan shapes are disjoint by construction except
+    # for group loops whose iteration can both continue and complete on
+    # the same loop take: there a k-take run and its split across two
+    # iterations are distinct live computations over identical rows.
+    seen_sets: set = set()
+    emits = []
+    for tag, ii, h, rows in cands:
+        if ii in pruned_starts:
+            continue
+        rows = [(p, s2[:-4] if s2.endswith("__gq") else s2) for p, s2 in rows]
+        sig = frozenset(rows)
+        if sig in seen_sets:
+            continue
+        seen_sets.add(sig)
+        emits.append((tag, h, rows))
+    if skip_c is not None:
+        # retention: dropped rows are the sorted prefix; gates and
+        # emissions live while they can still affect undecided starts
+        # (horizon above the frontier / pruning id at or beyond the
+        # first kept rid)
+        first_kept = aux["rid_base"] + n_done
+        aux["rid_base"] = first_kept
+        if n:
+            aux["cursor"] = max(aux["cursor"], first_kept)
+        aux["gates"] = [(g, gh) for g, gh in aux["gates"] if gh > f_new]
+        aux["emissions"] = [(e, p) for e, p in aux["emissions"] if p >= first_kept]
+    return emits, n_done, aux
+
+
+def _candidate_starts(pl, bools, lo: int, hi: int) -> list[int]:
+    """Start rows in ``[lo, hi)`` where the plan's prefix can match at
+    all: the bitmask regex (the same backtracking paths as the
+    enumerator, minus WITHIN and iterative checks, so a necessary
+    condition) finds them in C; without one (too many symbols) the
+    first-symbol set filters. An empty regex match stays a candidate."""
+    if lo >= hi:
+        return []
+    rx = pl["rx"]
+    if rx is None:
+        can = np.logical_or.reduce([bools[j] for j in pl["first_idx"]])
+        return (lo + np.flatnonzero(can[lo:hi])).tolist()
+    enc = _encode_bitmask_str(bools, len(bools[0]))
+    out = []
+    i = lo
+    while i < hi:
+        mm = rx.search(enc, i)
+        if mm is None or mm.start() >= hi:
+            break
+        out.append(mm.start())
+        i = mm.start() + 1
+    return out
+
+
+def _skip_prune(ticks, flag, frame, f_new, delta, dec, surv_starts,
+                dead_gates, skip_c, aux, order_col) -> set:
+    """AfterMatchSkipStrategy pruning for one key (NFA.java:396-436
+    ``processMatchesAccordingToSkipStrategy`` +
+    ``aftermatch/AfterMatchSkipStrategy.prune``): the full pattern's
+    sequential matcher runs from the keyed cursor (the AFTER MATCH SKIP
+    resume position), then the reference emission loop is replayed.
+    Completed matches queue by START event; a match's emission lands at
+    the first buffered event reaching max(completion tick, previous
+    emission, horizons of earlier reported-timeout starts), and a
+    decided start's partials are PRUNED (dropped, not reported) iff
+    some emission with pruningId >= the start's rid precedes the
+    start's horizon. Returns the pruned local start indexes."""
+    n = len(ticks)
+    f_syms, match_at, f_filler = skip_c["symbols"], skip_c["match_at"], skip_c["fillers"]
+    mode, skip_sym = skip_c["mode"], skip_c.get("sym")
+    f_fluid, f_greedy, f_flidx = skip_c.get("fluid"), skip_c.get("greedy"), skip_c["flidx"]
+    # SkipToElementStrategy prunes with STRICT < (vs <= for the
+    # whole-match strategies) and resumes AT the mapped element — the
+    # resume point is >= the match start >= frontier − within, so the
+    # overlapping rescan stays inside the horizon-bounded buffer
+    strict = mode in ("to_first", "to_last")
+
+    def _covers(s_rid, p):
+        return s_rid < p if strict else s_rid <= p
+
+    fbools = [flag(j) for j in skip_c["sym_flags"]]
+    f_ic = None
+    if skip_c.get("iter_define"):
+        # IterativeCondition context for the full-pattern cursor: event
+        # dicts carry the __sym static flags like every matcher route
+        fr_f = frame().copy()
+        for s_name, arr in zip(f_syms, fbools):
+            fr_f[f"__sym_{s_name}"] = arr
+        f_ic = _build_ic(fr_f, f_syms, len(f_syms), skip_c["iter_define"], order_col)
+    tn_arr = flag(skip_c["tn"]) if skip_c.get("tn") is not None else None
+    # resume from the keyed cursor; a match starting at tick <= f_new
+    # has its whole within-horizon buffered, so it is final. Rid
+    # stability relies on per-key event-time ordered arrival: new rows
+    # sort after the carried suffix, so carried positions never shift.
+    rid_base = aux["rid_base"]
+    tick_l = ticks.tolist()
+    matches_new = []
+    i = max(0, aux["cursor"] - rid_base)
+    while i < n and tick_l[i] <= f_new:
+        lim = bisect_left(tick_l, tick_l[i] + delta, i)
+        if skip_c["enum"]:
+            fcands = [
+                mm for mm in match_at(fbools, int(i), lim, f_ic)
+                if mm[0][1] not in f_filler
+                and (not f_fluid or _fluid_ok(mm, fbools, f_flidx, f_fluid))
+                and (not f_greedy
+                     or _greedy_ok(mm, fbools, f_flidx, f_greedy, f_filler))
+                and (tn_arr is None or not tn_arr[mm[-1][0] + 1 : lim].any())
+            ]
+            m = (
+                min(fcands, key=lambda c: (len(c), [p for p, _s in c]))
+                if fcands else None
+            )
+        else:
+            m = match_at(fbools, int(i), lim, f_ic)
+            if m and m[0][1] in f_filler:
+                m = None  # filler-anchored: re-found at its row
+        if m and tn_arr is not None and tn_arr[m[-1][0] + 1 : lim].any():
+            # terminal notFollowedBy: the PENDING sequence is killed by
+            # an N event in (last row, horizon) — no match, no resume,
+            # the next start still scans
+            m = None
+        if m:
+            e_pos = m[-1][0]
+            if mode == "past_last_row":
+                prid, nxt = rid_base + e_pos, e_pos + 1
+            elif mode == "to_next_row":
+                prid, nxt = rid_base + m[0][0], i + 1
+            else:  # to_first / to_last SYM: resume AT the mapped element
+                # (raises the reference's infinite-loop / no-mapped-rows
+                # contract)
+                nxt = _resume_pos(m, mode, skip_sym, f_syms)
+                prid = rid_base + nxt
+            # a terminal-NOT pending completes AT its horizon
+            # (advanceTime turns it into a potential match)
+            e_tick = (
+                float(ticks[i]) + delta if tn_arr is not None
+                else float(ticks[e_pos])
+            )
+            matches_new.append((rid_base + m[0][0], e_tick, prid))
+            i = nxt
+        else:
+            i += 1
+    aux["cursor"] = rid_base + i
+    # emission replay in start-rid order: matches at/below a start's rid
+    # emit before its verdict (their emission may prune it); a reported
+    # start's horizon gates every LATER match (the reference's
+    # start-ordered completed queue)
+    gates, emissions = aux["gates"], aux["emissions"]
+
+    def _emit(ms_rid, e_tick, prid):
+        thr = max(e_tick, aux["prev_emit"])
+        for g_rid, g_h in gates:
+            if g_rid < ms_rid and g_h > thr:
+                thr = g_h
+        j = int(np.searchsorted(ticks, thr, side="left"))
+        if j < n:  # always true: thr <= max buffered tick
+            aux["prev_emit"] = float(ticks[j])
+            emissions.append((aux["prev_emit"], prid))
+
+    pruned: set = set()
+    mi = 0
+    for i in dec:
+        ii = int(i)
+        s_rid = rid_base + ii
+        h = float(ticks[i]) + delta
+        while mi < len(matches_new) and matches_new[mi][0] <= s_rid:
+            _emit(*matches_new[mi])
+            mi += 1
+        if ii in surv_starts:
+            if any(e < h and _covers(s_rid, p) for e, p in emissions):
+                pruned.add(ii)
+            else:
+                gates.append((s_rid, h))
+        elif ii in dead_gates:
+            # a stop-edge-killed branch stays live (and gating) until
+            # its kill event; pruned-before-death entries are subsumed
+            # by prev_emit monotonicity
+            d = dead_gates[ii]
+            if not any(e < d and _covers(s_rid, p) for e, p in emissions):
+                gates.append((s_rid, d))
+    while mi < len(matches_new):  # matches past the last start
+        _emit(*matches_new[mi])
+        mi += 1
+    return pruned
+
+
+def timed_out_partials(
     events: DataFrame,
     partition_by,
     order_cols,
     input_cols: list[str],
     plans: list[dict],
+    flags: TimeoutFlags,
     delta: float,
     is_time: bool,
     skip: dict | None = None,
 ) -> DataFrame:
-    """Streaming side of ``PatternStream.timed_out_partial_matches()``
-    — Flink's timed-out partial-match side output on an unbounded
-    stream (CepOperator advances the NFA per watermark and routes the
-    pruned partials to the timeout tag; PatternStream.java:202-214).
+    """Flink's timed-out partial-match side output
+    (``PatternStream.timed_out_partial_matches()``; CepOperator routes
+    the partials ``NFA.advanceTime`` prunes to the timeout tag,
+    PatternStream.java:202-214) on bounded AND unbounded input: one
+    per-key decision core (:func:`_decide_timeouts`), two harnesses.
 
-    Horizon-close emission (the same timeout-then-emit rule as the
-    terminal_not path): a start row is DECIDED exactly once, when the
-    key has buffered a row at/after ``start + within`` — the
-    event-driven ``NFA.advanceTime`` witness. The decided slice is then
-    enumerated with the SAME ``_ast_enumerator`` the batch no_skip
-    engine uses (one compiled prefix pattern per parked shape, built by
-    the fluent wrapper), and survival is a numpy scan over the buffered
-    gap ``(last take, horizon)``: primary parked branch per its ignore
-    condition ('consume' = NOT(take) guard, 'any' = no ignore edge,
-    'persist' = true ignore) OR any 'IGNORE after PROCEED' migrated
-    copy (NFA.java:621-633), gated on the loop minimum where the inner
-    states have no PROCEED edge. Identical user-row sets collapse to
-    one emitted partial — same contract as the batch route.
+    - **Bounded**: one keyed shuffle + ``sortWithinPartitions`` +
+      ``mapInPandas``; many keys share an Arrow batch (key-boundary
+      carry, :func:`_key_chunks`), the core runs once per key over all
+      of its rows, and each chunk's output is one ``iloc``. Every flag
+      is a JVM column from ONE select over the input.
+    - **Streaming**: ``applyInPandasWithState``; per-key state is the
+      undecided suffix (rows with ``tick > max_tick - within``, so
+      state is bounded by the window horizon), the decided frontier,
+      the id serial and, under a skip strategy, the matcher cursor and
+      open gate/emission summaries. Flags are the pandas predicates,
+      evaluated on the buffered rows. In-order caveat (as
+      ``streaming_match_recognize``): per-key event-time ordered
+      arrival — a late row below a decided horizon cannot retro-create
+      or kill branches.
 
-    ``plans``: one dict per parked shape — ``pat`` (compiled pattern
-    string incl. gap fillers), ``define`` (pandas predicates per
-    symbol), ``user_syms``, ``tag``, ``primary``/``copies`` survival
-    specs carrying pandas take-predicates, ``gate`` = (loop_sym, lo).
+    Both routes decide a start exactly once, when the key has a row
+    at/after ``start + within``; a one-shot bounded run and an
+    incremental streaming replay of the same rows agree.
 
-    ``skip`` (round 11): AfterMatchSkipStrategy support — ``None`` =
-    no_skip (every partial reported); else a dict with ``mode``
-    ('past_last_row' | 'to_next_row'), ``pat``/``define``/``user_syms``
-    for the FULL pattern compiled ``emit='first'``. The operator then
-    runs the sequential matcher incrementally over the decided region
-    (keyed-state cursor = the AFTER MATCH SKIP resume position) and
-    replays the reference emission loop (NFA.java:396-436): a match's
-    emission lands at the first buffered event reaching max(completion
-    tick, previous emission, horizons of earlier reported-timeout
-    starts — the start-ordered queue's gating), and a decided start's
-    partials are PRUNED (dropped, not reported) iff some emission with
-    pruningId >= the start's rid precedes the start's horizon. All
-    emission witnesses lie inside the 1x-``within`` buffer (completion
-    <= start + within <= frontier + within = max buffered tick), so
-    state stays bounded: the undecided suffix + the match cursor +
-    open-horizon gate/emission summaries.
+    ``plans``: one dict per parked-branch shape, built by the fluent
+    wrapper — ``pat`` (compiled prefix pattern incl. gap fillers),
+    ``define`` (symbol -> flag id), ``user_syms``, ``tag``, optional
+    ``iter_define``/``fluid``/``greedy``, ``spans`` (interior-greedy
+    span kills), ``primary`` = (kind, take flag, kills, iterative fn)
+    with kind 'consume' (NOT(take) guard) / 'any' (no ignore edge) /
+    'persist' (true ignore), ``copies`` = 'IGNORE after PROCEED'
+    migrated copies (NFA.java:621-633) as (kind, take flag, kills,
+    count gate, iterative fn), ``gate`` = loop-count gate. ``skip``:
+    ``None`` = no_skip, else the AfterMatchSkipStrategy spec — ``mode``,
+    ``sym``, and the FULL pattern's ``pat``/``define``/``user_syms``
+    (plus ``tn``, ``fluid``, ``greedy``, ``iter_define``).
 
-    100 TB: one shuffle on the key; per-key state is the undecided
-    suffix only (rows with ``tick > max_tick - within``), so state is
-    bounded by the window horizon regardless of stream length. In-order
-    caveat (same as ``streaming_match_recognize``): per-key event-time
-    ordered arrival — a late row below an already-decided horizon
-    cannot retro-create or kill branches.
+    Output: input columns + ``matched_symbol``, ``timeout_id`` (``tag#n``,
+    unique with the keys) and ``timeout_ts`` (the horizon in order-column
+    units: a timestamp for timestamp orders, a double otherwise)."""
+    part_cols = [partition_by] if isinstance(partition_by, str) else list(partition_by)
+    order_cols = [order_cols] if isinstance(order_cols, str) else list(order_cols)
+    compiled, skip_c = _compile_timeout_plans(plans, skip)
+    if events.isStreaming:
+        return _timeouts_streaming(
+            events, part_cols, order_cols, input_cols, compiled, skip_c,
+            flags, delta, is_time,
+        )
+    return _timeouts_bounded(
+        events, part_cols, order_cols, input_cols, compiled, skip_c, flags,
+        delta, is_time,
+    )
 
-    Output: input columns + ``matched_symbol``/``timeout_id``/
-    ``timeout_ts`` — the batch side output's schema (ids differ; the
-    stream==batch tests compare (event-set, timeout_ts) sets).
-    """
+
+def _emit_rows(emits, serial0, offset, out):
+    """Append the core's emits to ``out`` = per-row (positions, symbols,
+    timeout ids, horizons) lists; ids number partials from ``serial0``."""
+    pos, syms, ids, hs = out
+    for k, (tag, h, rows) in enumerate(emits):
+        tid = f"{tag}#{serial0 + k}"
+        for p, s2 in rows:
+            pos.append(offset + p)
+            syms.append(s2)
+            ids.append(tid)
+            hs.append(h)
+
+
+def _timeouts_bounded(events, part_cols, order_cols, input_cols, compiled,
+                      skip_c, flags, delta, is_time):
+    from pyspark.sql.types import DoubleType, StringType, StructField, StructType
+
+    from reshape_on_flink_spark.session import (
+        PYTHON_STAGE_TASK_BYTES,
+        python_stage_width,
+    )
+
+    no_cat = [what for c, _p, what in flags.specs if c is None]
+    if no_cat:
+        raise ValueError(
+            f"timeout side output needs a Catalyst condition on {no_cat[0]}"
+        )
+    ocol = order_cols[0]
+    tick = (
+        F.unix_micros(F.col(ocol)).cast("double") if is_time
+        else F.col(ocol).cast("double")
+    )
+    n_flags = len(flags.specs)
+    flagged = events.select(
+        *input_cols,
+        tick.alias("__to_tick"),
+        *[
+            F.coalesce(c, F.lit(False)).alias(f"__to_f{j}")
+            for j, (c, _p, _w) in enumerate(flags.specs)
+        ],
+    )
+    out_schema = StructType([
+        *events.select(*input_cols).schema.fields,
+        StructField("matched_symbol", StringType()),
+        StructField("timeout_id", StringType()),
+        StructField("__to_h", DoubleType()),
+    ])
+    ninf = float("-inf")
+
+    def run_chunks(batches):
+        import pandas as pd
+
+        for pdf, starts in _key_chunks(batches, part_cols):
+            data = pdf[input_cols]
+            ticks = pdf["__to_tick"].to_numpy(dtype="float64")
+            cols = [pdf[f"__to_f{j}"].to_numpy(dtype=bool) for j in range(n_flags)]
+            ends = np.append(starts[1:], len(pdf))
+            pos, syms, ids, hs = acc = ([], [], [], [])
+            for s, e in zip(starts.tolist(), ends.tolist()):
+                emits, _n_done, _aux = _decide_timeouts(
+                    ticks[s:e],
+                    lambda j, s=s, e=e: cols[j][s:e],
+                    lambda s=s, e=e: data.iloc[s:e].reset_index(drop=True),
+                    ninf, delta, compiled, skip_c, None, ocol,
+                )
+                _emit_rows(emits, 0, s, acc)
+            if not pos:
+                continue
+            out = data.iloc[pos].reset_index(drop=True)
+            out["matched_symbol"] = pd.Series(syms, dtype=object)
+            out["timeout_id"] = pd.Series(ids, dtype=object)
+            out["__to_h"] = pd.Series(hs, dtype="float64")
+            yield out
+
+    # partitioned on a HASH of the keys, not the keys: over an input
+    # already hash-partitioned by the keys (a keyed window upstream) a
+    # plain repartition(n, keys) is dropped as redundant, AQE then
+    # coalesces the upstream exchange by bytes and the whole Python
+    # stage runs as one task
+    width = python_stage_width(flagged, task_bytes=PYTHON_STAGE_TASK_BYTES)
+    res = (
+        flagged.repartition(width, F.hash(*part_cols))
+        .sortWithinPartitions(*part_cols, *order_cols)
+        .mapInPandas(run_chunks, schema=out_schema)
+    )
+    ts = (
+        F.timestamp_micros(F.col("__to_h").cast("long")) if is_time
+        else F.col("__to_h")
+    )
+    return res.select(*input_cols, "matched_symbol", "timeout_id", ts.alias("timeout_ts"))
+
+
+def _timeouts_streaming(events, part_cols, order_cols, input_cols, compiled,
+                        skip_c, flags, delta, is_time):
     import pickle
 
     from pyspark.sql.types import (
@@ -2502,75 +2775,28 @@ def streaming_timed_out_partials(
         TimestampType,
     )
 
-    part_cols = [partition_by] if isinstance(partition_by, str) else list(partition_by)
-    order_cols = [order_cols] if isinstance(order_cols, str) else list(order_cols)
-    ocol = order_cols[0]
-
-    compiled = []
-    for pl in plans:
-        ast = parse_pattern_ast(pl["pat"])
-        symbols = ast_symbols(ast)
-        missing = [s for s in symbols if s not in pl["define"]]
-        if missing:
-            raise ValueError(f"timeout prefix symbols without DEFINE: {missing}")
-        compiled.append((symbols, _ast_enumerator(symbols, ast), pl))
-
-    skip_compiled = None
-    if skip is not None:
-        if skip["mode"] not in (
-            "past_last_row", "to_next_row", "to_first", "to_last"
-        ):
-            raise NotImplementedError(
-                f"streaming timeout skip mode {skip['mode']!r} is unknown"
-            )
-        f_ast = parse_pattern_ast(skip["pat"])
-        f_syms = ast_symbols(f_ast)
-        missing = [s for s in f_syms if s not in skip["define"]]
-        if missing:
-            raise ValueError(f"skip full-pattern symbols without DEFINE: {missing}")
-        f_user = set(skip["user_syms"])
-        f_fluid = skip.get("fluid")
-        f_greedy = skip.get("greedy")
-        skip_compiled = (
-            f_syms,
-            # a FLUID full pattern (optional-tail group loop) or a
-            # greedy sink guard needs the enumerate+filter route: the
-            # sequential matcher's single candidate may be an
-            # over-admitted link expansion / a guarded jump
-            _ast_enumerator(f_syms, f_ast) if (f_fluid or f_greedy)
-            else _ast_matcher(f_syms, f_ast),
-            frozenset(j for j, s in enumerate(f_syms) if s not in f_user),
-            skip["mode"],
-            skip.get("sym"),
-            skip.get("tn"),
-            f_fluid,
-            _fluid_index(f_syms) if (f_fluid or f_greedy) else None,
-            f_greedy,
-            # round 14: the cursor threads IterativeCondition contexts
-            skip.get("iter_define"),
+    no_pd = [what for _c, p, what in flags.specs if p is None]
+    if no_pd:
+        raise ValueError(
+            "streaming timeout side output needs a vectorized pandas "
+            f"predicate on {no_pd[0]}"
         )
-
+    fns = [p for _c, p, _w in flags.specs]
+    ocol = order_cols[0]
     sample = events.select(*input_cols)
-    out_schema = StructType(
-        [
-            *sample.schema.fields,
-            StructField("matched_symbol", StringType()),
-            StructField("timeout_id", StringType()),
-            StructField(
-                "timeout_ts", TimestampType() if is_time else DoubleType()
-            ),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("pending", BinaryType()),
-            StructField("frontier", DoubleType()),
-            StructField("serial", LongType()),
-        ]
-    )
+    out_schema = StructType([
+        *sample.schema.fields,
+        StructField("matched_symbol", StringType()),
+        StructField("timeout_id", StringType()),
+        StructField("timeout_ts", TimestampType() if is_time else DoubleType()),
+    ])
+    state_schema = StructType([
+        StructField("pending", BinaryType()),
+        StructField("frontier", DoubleType()),
+        StructField("serial", LongType()),
+    ])
 
     def run(key, pdfs, state):
-        import numpy as np
         import pandas as pd
 
         aux = None
@@ -2578,29 +2804,21 @@ def streaming_timed_out_partials(
             blob, frontier, serial = state.get
             st0 = pickle.loads(blob)
             skip_format = isinstance(st0, dict) and "pdf" in st0 and "aux" in st0
-            if (skip_compiled is not None) != skip_format:
+            if (skip_c is not None) != skip_format:
                 raise ValueError(
                     "timeout state format mismatch: after_match changed "
                     "across restart (restored keyed state was written by "
                     f"a {'skip-enabled' if skip_format else 'no-skip'} "
                     "query, this query is "
-                    f"{'no-skip' if skip_compiled is None else 'skip-enabled'})"
+                    f"{'no-skip' if skip_c is None else 'skip-enabled'})"
                     " — restart from a fresh checkpoint"
                 )
-            if skip_compiled is not None:
+            if skip_c is not None:
                 pending, aux = st0["pdf"], st0["aux"]
             else:
                 pending = st0
         else:
             pending, frontier, serial = None, float("-inf"), 0
-        if skip_compiled is not None and aux is None:
-            aux = {
-                "rid_base": 0,
-                "cursor": 0,
-                "prev_emit": float("-inf"),
-                "gates": [],      # (start_rid, horizon) of reported starts
-                "emissions": [],  # (emit_tick, prune_rid)
-            }
         new = pd.concat(list(pdfs), ignore_index=True)[input_cols]
         pdf = (
             pd.concat([pending, new], ignore_index=True)
@@ -2613,651 +2831,36 @@ def streaming_timed_out_partials(
             ).astype("float64")
         else:
             ticks = pdf[ocol].to_numpy().astype("float64")
-        n = len(pdf)
-        max_tick = float(ticks[-1]) if n else float("-inf")
-        f_new = max_tick - delta  # starts at/below this tick are decided
-        dec = np.nonzero((ticks > frontier) & (ticks <= f_new))[0]
+        cache: dict = {}
 
-        # phase 1: enumerate the surviving parked branches per decided
-        # start (NFA ignore-condition survival — independent of skip
-        # pruning), in plan-major order
-        cands: list = []  # (tag, local start idx, horizon, rows)
-        surv_starts: set = set()
-        # start idx -> latest stop-edge death tick among its killed
-        # branches: a branch killed mid-gap by until()/NOT gates later
-        # matches' emissions until its kill event (it is live in the
-        # reference's partialMatches until then), even though it never
-        # reaches the timeout output itself
-        dead_gates: dict = {}
-        for symbols, enum_at, pl in compiled:
-            if not len(dec):
-                break
-            bools = [
-                np.asarray(pl["define"][s](pdf).to_numpy(), dtype=bool)
-                for s in symbols
-            ]
-            user = set(pl["user_syms"])
-            prim, copies, gate = pl["primary"], pl["copies"], pl["gate"]
-            pl_ic = None
-            if pl.get("iter_define"):
-                # event dicts must carry the __sym static flags: the
-                # compiler's iterative FILLER conditions read a sibling
-                # symbol's static verdict off the row
-                # (e.get(f"__sym_{name}", True)) — without the column
-                # the permissive default drops the static part and a
-                # statically-non-take-able row wrongly breaks loop gaps
-                # (found round 14; the match operator's scan() already
-                # does this)
-                fr2 = pdf.copy()
-                for s_name, arr in zip(symbols, bools):
-                    fr2[f"__sym_{s_name}"] = np.asarray(arr, dtype=bool)
-                pl_ic = _build_ic(
-                    fr2, symbols, len(symbols), pl["iter_define"],
-                    order_cols[0],
-                )
-            prim_it = prim[3] if len(prim) > 3 else None
-            if prim[0] == "consume":
-                prim_arr = (
-                    np.asarray(prim[1](pdf).to_numpy(), dtype=bool)
-                    if prim[1] is not None
-                    else np.ones(n, dtype=bool)  # iterative-only static
-                )
-            else:
-                prim_arr = None
-            # iterative scans (round 13): evaluated per branch against
-            # its own partial match — lazy per-batch records + context
-            plan_has_iter = prim_it is not None or any(
-                len(c) > 4 and c[4] is not None for c in copies
-            )
-            it_recs = it_ctx = None
-            if plan_has_iter:
-                it_recs = pdf.to_dict("records")
-                it_ctx = _IterCtx(
-                    it_recs,
-                    [s[:-4] if s.endswith("__gq") else s for s in symbols],
-                    order_cols[0],
-                )
+        def flag(j):
+            a = cache.get(j)
+            if a is None:
+                a = cache[j] = _bool_arr(fns[j](pdf))
+            return a
 
-            def _first_take_it(arr, itfn, gap, taken):
-                """First consuming take in the gap: static flag AND, for
-                iterative scans, the IterativeCondition over THIS
-                branch's taken rows."""
-                nz = np.nonzero(arr[gap])[0]
-                if not len(nz):
-                    return None
-                if itfn is None:
-                    return gap.start + int(nz[0])
-                it_ctx.taken = tuple(taken)
-                for off in nz:
-                    p2 = gap.start + int(off)
-                    it_ctx.pos = p2
-                    if itfn(it_recs[p2], it_ctx):
-                        return p2
-                return None
-
-            def _karr(kls):
-                return [
-                    (fl, np.asarray(f(pdf).to_numpy(), dtype=bool))
-                    for fl, f in kls
-                ]
-
-            def _killed(kls, gap):
-                # 'gap' kill: any matching event in (last take, horizon);
-                # 'adj' kill (not_next): the FIRST gap event matches —
-                # the gap slice is horizon-bounded already
-                for fl, ka in kls:
-                    seg = ka[gap]
-                    if fl == "gap":
-                        if seg.any():
-                            return True
-                    elif len(seg) and seg[0]:
-                        return True
-                return False
-
-            def _kill_pos(kls, gap):
-                # earliest stop-edge position in the gap (absolute
-                # index into pdf), or None — the tick where a killed
-                # branch leaves the reference's partialMatches
-                best = None
-                for fl, ka in kls:
-                    seg = ka[gap]
-                    if fl == "gap":
-                        nz = np.nonzero(seg)[0]
-                        if len(nz):
-                            pos = gap.start + int(nz[0])
-                            best = pos if best is None else min(best, pos)
-                    elif len(seg) and seg[0]:
-                        best = gap.start if best is None else min(best, gap.start)
-                return best
-
-            def _first_take(arr, gap):
-                nz = np.nonzero(arr[gap])[0]
-                return gap.start + int(nz[0]) if len(nz) else None
-
-            def _note_death(ii, kls, gap, take_arr, itfn=None, match=None):
-                # record the branch's stop-edge death tick for the
-                # emission-gate list: fires only if the kill precedes
-                # the event that would otherwise consume the branch
-                kp = _kill_pos(kls, gap)
-                if kp is None:
-                    return
-                if take_arr is not None:
-                    tk = (
-                        _first_take_it(take_arr, itfn, gap, match)
-                        if itfn is not None
-                        else _first_take(take_arr, gap)
-                    )
-                    if tk is not None and tk < kp:
-                        return
-                t = float(ticks[kp])
-                if t > dead_gates.get(ii, float("-inf")):
-                    dead_gates[ii] = t
-
-            prim_kills = _karr(prim[2]) if len(prim) > 2 else []
-            pl_fluid = pl.get("fluid")
-            pl_greedy = pl.get("greedy")
-            pl_flidx = (
-                _fluid_index(symbols) if (pl_fluid or pl_greedy) else None
-            )
-            pl_fillers = (
-                frozenset(
-                    i2 for i2, s2 in enumerate(symbols) if s2 not in user
-                )
-                if pl_greedy
-                else frozenset()
-            )
-            sp_arrs = [
-                (mode, gname, post,
-                 np.asarray(f(pdf).to_numpy(), dtype=bool))
-                for mode, gname, post, f in pl.get("spans", ())
-            ]
-            cp_arrs = [
-                (
-                    k2,
-                    np.asarray(f2(pdf).to_numpy(), dtype=bool)
-                    if f2 is not None
-                    else (
-                        np.ones(n, dtype=bool)
-                        if k2 == "fb" and len(rest) > 2
-                        and rest[2] is not None
-                        else None
-                    ),
-                    _karr(rest[0]) if rest else [],
-                    rest[1] if len(rest) > 1 else None,
-                    rest[2] if len(rest) > 2 else None,
-                )
-                for k2, f2, *rest in copies
-            ]
-            for i in dec:
-                h = float(ticks[i]) + delta
-                lim = int(np.searchsorted(ticks, h, side="left"))
-                seen: set = set()
-                for match in enum_at(bools, int(i), lim, pl_ic):
-                    if pl_fluid and not _fluid_ok(
-                        match, bools, pl_flidx, pl_fluid
-                    ):
-                        continue
-                    # greedy inner-loop sink guard (round 14, late):
-                    # per-run span filter, same rule as the batch
-                    # prefix enumerations
-                    if pl_greedy and not _greedy_ok(
-                        match, bools, pl_flidx, pl_greedy, pl_fillers
-                    ):
-                        continue
-                    rows = sorted(
-                        (pos, symbols[si])
-                        for pos, si in match
-                        if symbols[si] in user
-                    )
-                    if not rows:
-                        continue
-                    kset = frozenset(rows)
-                    if kset in seen:  # filler splits of one partial
-                        continue
-                    seen.add(kset)
-                    # interior-greedy span kills (round 12, late): the
-                    # de-greedy'd prefix enumerates every expansion;
-                    # drop those with a greedy-take-able event in
-                    # (anchor, next taken row] — the sink guard. 'g'
-                    # mode anchors on the last greedy row (zero-take
-                    # exempt: unbounded optional loops guard only the
-                    # loop's sink COPY); 'anchor' mode on the last
-                    # pre-post row (bounded times guard the original)
-                    bad = False
-                    for mode, gname, post, sp in sp_arrs:
-                        if mode == "g":
-                            gp = [p2 for p2, s2 in rows if s2 == gname]
-                            if not gp:
-                                continue
-                            anchor = gp[-1]
-                        else:
-                            anchor = max(
-                                p2 for p2, s2 in rows if s2 not in post
-                            )
-                        nxt = min(p2 for p2, _s2 in rows if p2 > anchor)
-                        if sp[anchor + 1 : nxt + 1].any():
-                            bad = True
-                            break
-                    if bad:
-                        continue
-                    j = rows[-1][0]
-                    gap = slice(j + 1, lim)
-                    gap_any = lim > j + 1
-                    if prim[0] == "persist":
-                        alive = True
-                    elif prim[0] == "any":
-                        alive = not gap_any
-                    elif prim_it is not None:
-                        alive = (
-                            _first_take_it(prim_arr, prim_it, gap, match)
-                            is None
-                        )
-                    else:
-                        alive = not prim_arr[gap].any()
-                    if alive and prim_kills:
-                        alive = not _killed(prim_kills, gap)
-                    if skip_compiled is not None and prim_kills:
-                        _note_death(
-                            int(i), prim_kills, gap,
-                            prim_arr if prim[0] == "consume" else None,
-                            prim_it, match,
-                        )
-                    gated = True
-                    cnt = 0
-                    if gate is not None:
-                        gsyms = (
-                            gate[0]
-                            if isinstance(gate[0], (tuple, list, set))
-                            else (gate[0],)
-                        )
-                        cnt = sum(1 for _p, s2 in rows if s2 in gsyms)
-                        if gate[1] is not None:
-                            gated = cnt >= gate[1]
-                        if len(gate) > 3 and gate[2] is not None:
-                            # dual-counter gate (round 14, bounded
-                            # inner loops): current-iteration loop
-                            # takes must reach the inner minimum for
-                            # PROCEED copies to exist
-                            g2 = set(gate[2])
-                            cnt2 = sum(
-                                1 for _p, s2 in rows if s2 in g2
-                            )
-                            gated = gated and cnt2 >= gate[3]
-
-                    def _cok(cg, _cnt=None):
-                        # per-copy gate against the iteration count
-                        if cg is None:
-                            return True
-                        c = cnt if _cnt is None else _cnt
-                        return c >= cg[1] if cg[0] == "ge" else c < cg[1]
-
-                    if not alive and cp_arrs and gap_any and gated:
-                        for k2, arr, kls, cg, it2 in cp_arrs:
-                            if (
-                                _cok(cg)
-                                and (
-                                    k2 == "fba"
-                                    or _first_take_it(arr, it2, gap, match)
-                                    is None
-                                )
-                                and not _killed(kls, gap)
-                            ):
-                                alive = True
-                                break
-                    if skip_compiled is not None and gap_any and gated:
-                        for k2, arr, kls, cg, it2 in cp_arrs:
-                            if kls and _cok(cg):
-                                _note_death(
-                                    int(i), kls, gap,
-                                    None if k2 == "fba" else arr,
-                                    it2, match,
-                                )
-                    if not alive:
-                        continue
-                    cands.append((pl["tag"], int(i), h, rows))
-                    surv_starts.add(int(i))
-
-        # phase 2 (skip strategies): incremental sequential matcher +
-        # emission replay + per-start prune verdicts. Only starts with
-        # SURVIVING branches enter the gate list — a start whose
-        # branches all die by consumption stops gating in the reference
-        # too (its deferral never crosses a later start's horizon).
-        pruned_starts: set = set()
-        if skip_compiled is not None and n and len(dec):
-            (f_syms, match_at, f_filler, mode, skip_sym, tn_pred,
-             f_fluid, f_flidx, f_greedy, f_iter) = skip_compiled
-            # SkipToElementStrategy prunes with STRICT < (vs <= for the
-            # whole-match strategies) and resumes AT the mapped element
-            # — the resume point is >= the match start >= frontier −
-            # within, so the overlapping rescan stays inside the
-            # horizon-bounded buffer
-            strict = mode in ("to_first", "to_last")
-
-            def _covers(s_rid, p):
-                return s_rid < p if strict else s_rid <= p
-
-            fbools = [
-                np.asarray(skip["define"][s](pdf).to_numpy(), dtype=bool)
-                for s in f_syms
-            ]
-            f_ic = None
-            if f_iter:
-                # IterativeCondition context for the full-pattern
-                # cursor (round 14): event dicts carry the __sym
-                # static flags like every other matcher route
-                fr_f = pdf.copy()
-                for s_name, arr in zip(f_syms, fbools):
-                    fr_f[f"__sym_{s_name}"] = np.asarray(arr, dtype=bool)
-                f_ic = _build_ic(
-                    fr_f, f_syms, len(f_syms), f_iter, ocol
-                )
-            tn_arr = (
-                np.asarray(tn_pred(pdf).to_numpy(), dtype=bool)
-                if tn_pred is not None
-                else None
-            )
-            # resume from the keyed cursor (the AFTER MATCH SKIP resume
-            # position); a match starting at tick <= f_new has its
-            # whole within-horizon buffered, so it is final. Rid
-            # stability relies on the operator's in-order contract
-            # (per-key event-time ordered arrival): new rows sort after
-            # the pending suffix, so pending positions never shift.
-            rid_base = aux["rid_base"]
-            matches_new = []
-            i = max(0, aux["cursor"] - rid_base)
-            while i < n and ticks[i] <= f_new:
-                lim = int(np.searchsorted(ticks, ticks[i] + delta, side="left"))
-                if f_fluid or f_greedy:
-                    fcands = [
-                        mm for mm in match_at(fbools, int(i), lim, f_ic)
-                        if mm[0][1] not in f_filler
-                        and (not f_fluid
-                             or _fluid_ok(mm, fbools, f_flidx, f_fluid))
-                        and (not f_greedy
-                             or _greedy_ok(mm, fbools, f_flidx, f_greedy,
-                                           f_filler))
-                        and (tn_arr is None
-                             or not tn_arr[mm[-1][0] + 1 : lim].any())
-                    ]
-                    m = (
-                        min(fcands,
-                            key=lambda c: (len(c), [p for p, _s in c]))
-                        if fcands
-                        else None
-                    )
-                else:
-                    m = match_at(fbools, int(i), lim, f_ic)
-                    if m and m[0][1] in f_filler:
-                        m = None  # filler-anchored: re-found at its row
-                if m and tn_arr is not None and tn_arr[m[-1][0] + 1 : lim].any():
-                    # terminal notFollowedBy: the PENDING sequence is
-                    # killed by an N event in (last row, horizon) — no
-                    # match, no resume, the next start still scans
-                    m = None
-                if m:
-                    e_pos = m[-1][0]
-                    if mode == "past_last_row":
-                        prid, nxt = rid_base + e_pos, e_pos + 1
-                    elif mode == "to_next_row":
-                        prid, nxt = rid_base + m[0][0], i + 1
-                    else:  # to_first / to_last SYM: resume AT the
-                        # mapped element (raises the reference's
-                        # infinite-loop / no-mapped-rows contract)
-                        nxt = _resume_pos(m, mode, skip_sym, f_syms)
-                        prid = rid_base + nxt
-                    # a terminal-NOT pending completes AT its horizon
-                    # (advanceTime turns it into a potential match)
-                    e_tick = (
-                        float(ticks[i]) + delta
-                        if tn_arr is not None
-                        else float(ticks[e_pos])
-                    )
-                    matches_new.append((rid_base + m[0][0], e_tick, prid))
-                    i = nxt
-                else:
-                    i += 1
-            aux["cursor"] = rid_base + i
-            # emission replay in start-rid order: matches at/below a
-            # start's rid emit before its verdict (their emission may
-            # prune it); a reported start's horizon gates every LATER
-            # match (the reference's start-ordered completed queue)
-            gates, emissions = aux["gates"], aux["emissions"]
-
-            def _emit(ms_rid, e_tick, prid):
-                thr = max(e_tick, aux["prev_emit"])
-                for g_rid, g_h in gates:
-                    if g_rid < ms_rid and g_h > thr:
-                        thr = g_h
-                j = int(np.searchsorted(ticks, thr, side="left"))
-                if j < n:  # always true: thr <= max buffered tick
-                    aux["prev_emit"] = float(ticks[j])
-                    emissions.append((aux["prev_emit"], prid))
-
-            mi = 0
-            for i in dec:
-                ii = int(i)
-                s_rid = rid_base + ii
-                h = float(ticks[i]) + delta
-                while mi < len(matches_new) and matches_new[mi][0] <= s_rid:
-                    _emit(*matches_new[mi])
-                    mi += 1
-                if ii in surv_starts:
-                    if any(e < h and _covers(s_rid, p) for e, p in emissions):
-                        pruned_starts.add(ii)
-                    else:
-                        gates.append((s_rid, h))
-                elif ii in dead_gates:
-                    # a stop-edge-killed branch stays live (and gating)
-                    # until its kill event; pruned-before-death entries
-                    # are subsumed by prev_emit monotonicity
-                    d = dead_gates[ii]
-                    if not any(e < d and _covers(s_rid, p) for e, p in emissions):
-                        gates.append((s_rid, d))
-            while mi < len(matches_new):  # matches past the last start
-                _emit(*matches_new[mi])
-                mi += 1
-
-        # phase 3: emit the unpruned partials, serials in plan-major
-        # order (identical numbering to the pre-skip operator when
-        # nothing is pruned). Computations sharing an event set
-        # collapse to ONE reported partial (NFAITCase compares sets) —
-        # plan shapes are disjoint by construction except for group
-        # loops whose iteration can both continue and complete on the
-        # same loop take (loop leaf with optable-only surroundings,
-        # round 14 late): there a k-take run and its split across two
-        # iterations are distinct live computations over identical rows.
-        seen_sets: set = set()
-        pieces = []
-        for tag, ii, h, rows in cands:
-            if ii in pruned_starts:
-                continue
-            sig = frozenset(
-                (p, s2[:-4] if s2.endswith("__gq") else s2)
-                for p, s2 in rows
-            )
-            if sig in seen_sets:
-                continue
-            seen_sets.add(sig)
-            out = pdf.iloc[[p for p, _s in rows]].copy()
-            out["matched_symbol"] = [s2 for _p, s2 in rows]
-            out["timeout_id"] = f"{tag}#{serial}"
-            out["timeout_ts"] = (
-                pd.Timestamp(int(h), unit="us") if is_time else h
-            )
-            serial += 1
-            pieces.append(out)
-        keep = pdf[ticks > f_new] if n else pdf
-        if skip_compiled is not None:
-            # retention: dropped rows are the sorted prefix; gates and
-            # emissions live while they can still affect undecided
-            # starts (horizon above the frontier / pruning id at or
-            # beyond the first kept rid)
-            n_dropped = n - len(keep)
-            first_kept = aux["rid_base"] + n_dropped
-            aux["rid_base"] = first_kept
-            if n:
-                aux["cursor"] = max(aux["cursor"], first_kept)
-            aux["gates"] = [
-                (g, gh) for g, gh in aux["gates"] if gh > f_new
-            ]
-            aux["emissions"] = [
-                (e, p) for e, p in aux["emissions"] if p >= first_kept
-            ]
-            blob = pickle.dumps({"pdf": keep, "aux": aux})
-        else:
-            blob = pickle.dumps(keep)
+        emits, n_done, aux = _decide_timeouts(
+            ticks, flag, lambda: pdf, frontier, delta, compiled, skip_c, aux, ocol,
+        )
+        pos, syms, ids, hs = acc = ([], [], [], [])
+        _emit_rows(emits, serial, 0, acc)
+        serial += len(emits)
+        keep = pdf.iloc[n_done:]
+        blob = pickle.dumps({"pdf": keep, "aux": aux} if skip_c is not None else keep)
+        f_new = (float(ticks[-1]) if len(ticks) else float("-inf")) - delta
         state.update((blob, float(max(frontier, f_new)), int(serial)))
-        if pieces:
-            yield pd.concat(pieces, ignore_index=True)
-        else:
-            yield pd.DataFrame(
-                columns=[*input_cols, "matched_symbol", "timeout_id", "timeout_ts"]
-            )
+        out = pdf.iloc[pos].reset_index(drop=True)
+        out["matched_symbol"] = pd.Series(syms, dtype=object)
+        out["timeout_id"] = pd.Series(ids, dtype=object)
+        out["timeout_ts"] = (
+            pd.to_datetime(pd.Series(hs, dtype="float64").astype("int64"), unit="us")
+            if is_time
+            else pd.Series(hs, dtype="float64")
+        )
+        yield out
 
     return sample.groupBy(*part_cols).applyInPandasWithState(
         run, out_schema, state_schema, "append", "NoTimeout"
-    )
-
-
-def skip_prune_verdicts(
-    events: DataFrame,
-    matches: DataFrame,
-    partials: DataFrame,
-    keys: list[str],
-    strict: bool,
-) -> DataFrame:
-    """Which partial-match starts does an AfterMatchSkipStrategy PRUNE
-    (silently discard — they never reach the timeout side output)?
-
-    Summary-level replay of the reference emission loop
-    (flink-libraries/flink-cep/.../nfa/NFA.java:396-436
-    ``processMatchesAccordingToSkipStrategy`` +
-    ``aftermatch/AfterMatchSkipStrategy.prune``), per partition key:
-
-    - Completed matches queue ordered by START event
-      (NFAState.COMPUTATION_STATE_COMPARATOR) and one is emitted only
-      once no live partial starts strictly earlier (``isEarlier`` uses
-      <=, so a same-start partial does not gate). A never-completing
-      earlier partial therefore DEFERS the emission until its own
-      horizon fires — and is itself reported by ``advanceTime``, which
-      runs before each event's ``doProcess``.
-    - Emission happens at the first event whose tick reaches
-      ``max(completion tick, previous emission tick, gating partials'
-      horizons)`` — processing is event-driven, like ``advanceTime``.
-    - On emission, live partials with start event <= pruningId
-      (``SkipRelativeToWholeMatchStrategy.shouldPrune``; STRICT < for
-      the SkipToElement strategies) are discarded. A partial whose
-      horizon is <= the emission tick was already reported by that
-      event's ``advanceTime`` — pruning only hits ``horizon > emit``.
-
-    Which branches can gate: surviving never-completing partials (the
-    ``__gate = 0`` rows — with static conditions an earlier-starting
-    live branch reaches every stage no later than a later start, so
-    completing branches co-complete and win by start order) AND
-    branches later killed mid-gap by a stop edge (until() /
-    notFollowedBy / not_next — NFACompiler's STOP transitions). A
-    stop-edge branch is live in ``partialMatches`` until its kill
-    event, so it defers emissions exactly until then: its gate entry
-    carries ``__gate = 1`` and ``__horizon`` = the kill tick, and it
-    is never itself reported (killed silently either way, so it must
-    not reach the pruned-verdict output that anti-joins the timeout
-    rows). Note the invariant that makes these gate-only rows
-    conservative for every currently constructible shape: an earlier
-    start's kill-exposure window opens no later than a later start's
-    (its last take at each stage is <=, forced by the relaxed ignore
-    NOT(take)), so a branch killed by a stop edge dies at or before
-    the tick where any later-starting match's gap would also have
-    died — the kill always precedes a completion it could gate. The
-    machinery still models the kill tick exactly so that future shape
-    lifts (greedy, NOT-before-fbAny) cannot silently break the
-    deferral order.
-
-    Inputs: ``events`` = keys + ``__rid``/``__tick`` (every partition
-    row, arrival-ordered rid = the EventId total order), ``matches`` =
-    keys + ``__srid``/``__etick``/``__prid`` (start rid, completion
-    tick, pruning-event rid — a null ``__prid`` degrades that match to
-    NoSkip, the reference's throwExceptionOnMiss=false path),
-    ``partials`` = keys + ``__srid``/``__horizon``/``__gate`` (0 =
-    reportable surviving partial, horizon = first tick + within; 1 =
-    stop-edge-killed branch, horizon = its kill tick). Output: the
-    keys + ``__srid`` of every PRUNED reportable partial start.
-
-    100 TB: one keyed shuffle of the tagged union; per-key work is a
-    linear walk over the key's matches with numpy masks over its
-    partial starts — matches and partials are per-key summaries, the
-    event axis is two doubles per row.
-    """
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    def _tag(df, t, a, b, c):
-        return df.select(
-            *keys,
-            F.lit(t).alias("__t"),
-            F.col(a).cast("double").alias("__a"),
-            F.col(b).cast("double").alias("__b"),
-            (F.col(c) if c else F.lit(None)).cast("double").alias("__c"),
-        )
-
-    tagged = (
-        _tag(events, "E", "__rid", "__tick", None)
-        .unionByName(_tag(matches, "M", "__srid", "__etick", "__prid"))
-        .unionByName(_tag(partials, "P", "__srid", "__horizon", "__gate"))
-    )
-    key_fields = [f for f in tagged.schema.fields if f.name in keys]
-    out_schema = StructType([*key_fields, StructField("__srid", LongType())])
-
-    def run(pdf):
-        m = pdf[pdf["__t"] == "M"]
-        p = pdf[pdf["__t"] == "P"]
-        if not len(m) or not len(p):
-            return pd.DataFrame(columns=[*keys, "__srid"])
-        ev = np.sort(pdf.loc[pdf["__t"] == "E", "__b"].to_numpy(dtype=float))
-        mm = m[["__a", "__b", "__c"]].to_numpy(dtype=float)
-        mm = mm[np.argsort(mm[:, 0], kind="stable")]
-        ps = p["__a"].to_numpy(dtype=float)
-        ph = p["__b"].to_numpy(dtype=float)
-        # gate-only rows (stop-edge-killed branches): defer emissions
-        # until their kill tick but never appear in the prune output
-        pgate = p["__c"].to_numpy(dtype=float) == 1.0
-        live = np.ones(len(ps), dtype=bool)
-        killed = np.zeros(len(ps), dtype=bool)
-        prev = -np.inf
-        for srid, etick, prid in mm:
-            if np.isnan(prid):  # SKIP TO with no mapped rows -> NoSkip
-                continue
-            thr = max(float(etick), prev)
-            gates = live & (ps < srid)
-            if gates.any():
-                thr = max(thr, float(ph[gates].max()))
-            i = int(np.searchsorted(ev, thr, side="left"))
-            if i >= len(ev):
-                continue  # never witnessed: the match is never emitted
-            emit = float(ev[i])
-            prev = emit
-            kill = live & (ph > emit) & ((ps < prid) if strict else (ps <= prid))
-            if kill.any():
-                killed |= kill
-                live &= ~kill
-        killed &= ~pgate
-        if not killed.any():
-            return pd.DataFrame(columns=[*keys, "__srid"])
-        out = p.loc[killed, list(keys)].copy()
-        out["__srid"] = p.loc[killed, "__a"].astype("int64").to_numpy()
-        return out
-
-    from reshape_on_flink_spark.session import (
-        PYTHON_STAGE_TASK_BYTES,
-        repartition_for_python_stage,
-    )
-
-    return (
-        repartition_for_python_stage(
-            tagged, list(keys), task_bytes=PYTHON_STAGE_TASK_BYTES
-        )
-        .groupBy(*keys)
-        .applyInPandas(run, out_schema)
     )
 
 

@@ -48,10 +48,9 @@ GATE_PRIORITY: tuple[str, ...] = (
     "q_retractable_topn",
     "q_updatable_topn",
     "q_similarity_pq_rerank",
-    # round-14 rewrites (rewritten-outranks-stalest): the timeout-branch
-    # survival predicates of timed_out_partial_matches now compile as
-    # SQL strings (api/cep.py round 14) — every consumer re-verifies
-    # this round even where its r13 evidence is fresh
+    # rewritten-outranks-stalest: timed_out_partial_matches runs on one
+    # per-key decision core for bounded and streaming input — every
+    # consumer re-verifies even where its earlier evidence is fresh
     "q_cep_timeout",
     "q_cep_timeout_skip",
     "q_cep_timeout_greedy",

@@ -1448,9 +1448,8 @@ def q_retract_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # following error/purchase tick) + the witness gate, all window
 # functions. Order axis: ord = epoch_sec * 100000 + per-user row_number
 # (unique, monotone with (ts, event_id); the rn term is < 1 second so
-# the 4h horizon is time-accurate). Scale: one keyed shuffle per prefix
-# length + per-partition window lookaheads — no range join, no driver
-# collect.
+# the 4h horizon is time-accurate). Scale: one keyed shuffle into the
+# per-key timeout decision core — no range join, no driver collect.
 # ---------------------------------------------------------------------------
 _CEP_TIMEOUT_DELTA = 14400 * 100000  # 4 hours in ord units
 
@@ -1556,10 +1555,9 @@ def q_cep_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
 # are pruned iff that event precedes the start's own horizon. t1 = the
 # {A} waiter of every unpruned witnessed start, t2 = every fbAny {A,B}
 # branch (B = ANY error strictly inside the window — fba waiters
-# persist past sibling takes, NFAITCase:405). Scale: the engine adds
-# one keyed shuffle of (key, rid, tick) for the emission replay over
-# the no_skip branch passes; per-key work is numpy masks over start
-# summaries.
+# persist past sibling takes, NFAITCase:405). Scale: the emission
+# replay runs inside the same per-key decision core as the branch
+# survival — no extra shuffle.
 # ---------------------------------------------------------------------------
 _CEP_SKIP_DELTA = 172800 * 100000  # 2 days in ord units
 
@@ -2121,7 +2119,7 @@ def q_cep_timeout_group_opt(spark: SparkSession, sf_dir: str) -> DataFrame:
 # walk. A node reports iff ANY of its waits survives to the horizon:
 # j=1 the loop scan only, j=2 loop OR purchase-copy, j=3 purchase
 # only, iteration-complete entry OR click-copy. Scale: the same
-# one-keyed-shuffle (now ONE multi-plan pass) as the other gates.
+# one-keyed-shuffle pass as the other gates.
 # ---------------------------------------------------------------------------
 @query(
     "q_cep_timeout_group_times",
@@ -2415,8 +2413,8 @@ def q_cep_timeout_group_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   T0 {s} iff no error in (s,h)
 # Pinned by the test_timeout_group_interior_not_* matrices and the
 # group_interior_not property-grid cells. Scale: the same
-# one-keyed-shuffle consolidated pass as the other timeout gates; the
-# oracle is join-free per step (window lookahead columns).
+# one-keyed-shuffle pass as the other timeout gates; the oracle is
+# join-free per step (window lookahead columns).
 # ---------------------------------------------------------------------------
 @query(
     "q_cep_timeout_group_not",

@@ -40,6 +40,42 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+#: Upper bound of the derived driver heap (the old fixed default).
+DRIVER_MEM_CAP_MB = 48 * 1024
+
+
+def _physical_mem_mb() -> int | None:
+    """Physical RAM in MiB (``MemTotal`` of /proc/meminfo, else sysconf);
+    None when neither is readable."""
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) // 1024
+    except OSError:
+        pass
+    try:
+        return os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**20
+    except (ValueError, OSError, AttributeError):
+        return None
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` default: half of physical RAM, capped at
+    48g. In local mode the driver JVM is the whole engine and its heap
+    grows toward ``-Xmx`` before collecting, so a heap sized above RAM
+    gets the JVM OOM-killed instead of garbage-collected; the other
+    half is left for off-heap buffers and the Python workers.
+    ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    total = _physical_mem_mb()
+    if total is None:
+        return f"{DRIVER_MEM_CAP_MB // 1024}g"
+    return f"{max(512, min(DRIVER_MEM_CAP_MB, total // 2))}m"
+
+
 def get_spark(
     app_name: str = "reshape_on_flink_spark",
     *,
@@ -88,7 +124,7 @@ def get_spark(
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
         builder = builder.master(f"local[{cores}]")

@@ -56,7 +56,11 @@ def chunked_replay(
     (
         df.repartitionByRange(n_chunks, F.col(order_col))
         .withColumn("_chunk", F.spark_partition_id() + F.lit(1))
-        .write.partitionBy("_chunk")
+        # one file per chunk even when the session caps records per file
+        # (spark.sql.files.maxRecordsPerFile): the replay maps one file
+        # to one micro-batch
+        .write.option("maxRecordsPerFile", 0)
+        .partitionBy("_chunk")
         .mode("overwrite")
         .parquet(os.path.join(out_dir, "chunks"))
     )
@@ -78,7 +82,14 @@ def chunked_replay(
                     "overwrite"
                 ).parquet(empty)
             src = empty
-        part = next(f for f in sorted(os.listdir(src)) if f.endswith(".parquet"))
+        parts = [f for f in sorted(os.listdir(src)) if f.endswith(".parquet")]
+        if len(parts) != 1:
+            raise RuntimeError(
+                f"chunked_replay: chunk {i} was written as {len(parts)} "
+                "parquet files, expected exactly one; replaying only one "
+                "of them would drop rows"
+            )
+        part = parts[0]
         dst = os.path.join(flat, f"{i:03d}.parquet")
         shutil.copy(os.path.join(src, part), dst)
         # FileStreamSource orders batches by modification time; rapid copies

@@ -83,6 +83,17 @@ def test_compile_relaxed_inserts_reluctant_fillers(spark):
     assert set(define) == {"a", "b", "c", "__gap0", "__gap1"}
 
 
+def test_stage_names_are_validated_at_construction():
+    """begin() applies the same identifier check as the linking methods:
+    a quote in the first stage's name is rejected before any symbol or
+    column name is built from it."""
+    with pytest.raises(ValueError, match="identifier"):
+        Pattern.begin("a'b")
+    with pytest.raises(ValueError, match="identifier"):
+        Pattern.begin("a").where("v=1").followed_by('b"c')
+    assert Pattern.begin("a_1")._stages[0].name == "a_1"
+
+
 def test_compile_rejections(spark):
     # consecutive/allowCombinations are mutually exclusive and
     # non-repeatable (Quantifier.java checkPattern messages)

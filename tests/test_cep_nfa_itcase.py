@@ -10,6 +10,7 @@ reference's SubEvent subtype, ``volume`` its extra field.
 from __future__ import annotations
 
 import collections
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -1473,10 +1474,11 @@ def test_timeout_times_optional_zero_or_exactly_n(spark):
 
 
 # ---------------------------------------------------------------------
-# Streaming timeout side output (horizon-close emission inside
-# streaming_timed_out_partials) — stream == batch on the reference
-# fixture and on a quantified-prefix pattern, replayed across chunks so
-# the frontier/buffer state crosses micro-batch boundaries.
+# Streaming timeout side output (horizon-close emission in keyed state)
+# — the incremental run of the timeout core equals the bounded one-shot
+# run on the reference fixture and on quantified-prefix patterns,
+# replayed across chunks so the frontier/buffer state crosses
+# micro-batch boundaries.
 # ---------------------------------------------------------------------
 
 
@@ -1571,43 +1573,55 @@ def test_streaming_timeouts_times_range_equal_batch(spark, tmp_dir):
 # ---------------------------------------------------------------------
 
 
-def test_skip_prune_verdicts_gate_only_kill_entries(spark):
-    """Unit pin of the emission-replay walk: a gate-only (stop-edge-
-    killed) partial with death tick 5 defers an earlier match's
-    emission from tick 3 to tick 5, saving the reportable partial
-    whose horizon (4.5) lies in between (the reference reports it via
-    advanceTime before the deferred emission); a second gate-only
-    entry (death 6.5) defers the second match past the 6.8 horizon.
-    Gate-only srids never appear in the prune output; the reportable
-    partial at srid 2 (horizon 10 > the tick-5 emission, start <= the
-    pruning id 3) is the only pruned start."""
-    from reshape_on_flink_spark.operators.cep import skip_prune_verdicts
+def test_timeout_skip_gate_only_kill_entry_both_routes(spark, tmp_dir):
+    """A stop-edge-killed branch that outlives a completed match: A ^N
+    fb B fb C within 10, B's take iterative (same ``v`` as A), over
+    a1@1 a2@3 b2@4 a9@5 c@6 b9@7 n@8 x@30. The match {3,4,6} completes
+    at c@6 while the earlier start a1 still waits for a v=1 B, so its
+    emission is deferred until n@8 kills that branch (a gate-only
+    entry: the branch is never reported). The partial {5,7} parks at
+    C, past the NOT gap, and times out at 15 under noSkip; under
+    skipPastLastEvent the deferred emission (tick 8 < 15, pruning id
+    c@6 >= its start a9@5) prunes it; under skipToNext (pruning id
+    a2@3) it survives. Batch and streaming agree."""
+    from tests.test_streaming import run_to_memory
+    from reshape_on_flink_spark.streaming.source import chunked_replay
 
-    ev = spark.createDataFrame(
-        [(1, r, float(r)) for r in range(1, 8)],
-        "k int, __rid long, __tick double",
+    rows = [(1, 1, "a", 1), (1, 3, "a", 2), (1, 4, "b", 2), (1, 5, "a", 9),
+            (1, 6, "c", 0), (1, 7, "b", 9), (1, 8, "n", 0), (1, 30, "x", 0)]
+    df = spark.createDataFrame(rows, "k int, ts int, name string, v int")
+
+    def both(name):
+        return lambda p: p.where(_n(name)).where(_pd_n(name))
+
+    pat = both("a")(Pattern.begin("A"))
+    pat = both("n")(pat.not_followed_by("N"))
+    pat = both("b")(pat.followed_by("B")).where(
+        lambda e, ctx: e["v"] == ctx.get_events_for_pattern("A")[0]["v"]
     )
-    matches = spark.createDataFrame(
-        [(1, 2, 3.0, 3.0), (1, 5, 5.5, 7.0)],
-        "k int, __srid long, __etick double, __prid double",
+    pat = both("c")(pat.followed_by("C")).within(10)
+    stream = chunked_replay(
+        spark, df, os.path.join(tmp_dir, "to_gate_kill"), n_chunks=3,
+        order_col="ts",
     )
-    partials = spark.createDataFrame(
-        [
-            (1, 1, 5.0, 1),   # killed at 5 -> gates match 1 (etick 3)
-            (1, 3, 4.5, 0),   # horizon 4.5 < deferred emission 5: saved
-            (1, 4, 6.5, 1),   # killed at 6.5 -> gates match 2 (5.5)
-            (1, 2, 10.0, 0),  # alive at emission 5, start <= prid 3: pruned
-            (1, 6, 6.8, 0),   # horizon 6.8 < deferred emission 7: saved
-        ],
-        "k int, __srid long, __horizon double, __gate int",
-    )
-    got = {
-        (r.k, r["__srid"])
-        for r in skip_prune_verdicts(
-            ev, matches, partials, ["k"], strict=False
-        ).collect()
+    want = {
+        "no_skip": {(frozenset({5, 7}), 15.0)},
+        "past_last_row": set(),
+        "to_next_row": {(frozenset({5, 7}), 15.0)},
     }
-    assert got == {(1, 2)}, got
+    for after, expected in want.items():
+        batch = _collect_timeouts(
+            CEP.pattern(df, pat, "k", "ts", after_match=after)
+            .timed_out_partial_matches()
+        )
+        assert batch == expected, (after, batch)
+        sdf = CEP.pattern(
+            stream, pat, "k", "ts", after_match=after
+        ).timed_out_partial_matches()
+        got = _collect_timeouts(run_to_memory(
+            spark, sdf, f"to_gate_kill_{after}", tmp_dir, mode="append"
+        ))
+        assert got == expected, (after, got)
 
 
 def test_timeout_skip_with_until_kill_scan(spark):

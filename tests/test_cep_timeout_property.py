@@ -7,8 +7,12 @@ Hand-traced matrices in test_cep_nfa_itcase.py pin the semantics cell
 by cell; this file cross-checks the two ROUTES against each other on
 denser random event soups, where branch interactions (migrated copies,
 kill scans, emission-replay pruning) compose in ways the matrices
-don't enumerate. Seeded random (not hypothesis): each case spins a
-real streaming query, so the grid is fixed and deterministic.
+don't enumerate. Both routes run the same per-key decision core, so
+the check is an incremental (chunked streaming replay, keyed state
+across micro-batches) against a one-shot (bounded) run of it, with
+conditions evaluated as pandas predicates on one side and Catalyst
+flag columns on the other. Seeded random (not hypothesis): each case
+spins a real streaming query, so the grid is fixed and deterministic.
 """
 
 from __future__ import annotations
@@ -350,109 +354,3 @@ def test_timeout_skip_subset_of_no_skip_random(spark):
                 spark, rows, _pattern(kind, _c), "past_last_row"
             )
             assert pruned <= base, (kind, seed)
-
-
-def test_cep_multi_pass_equals_singles(spark):
-    """match_recognize_multi contract (round 14, one-pass plan-id
-    consolidation): for every plan, the rows tagged __plan == tag equal
-    a standalone match_recognize no_skip pass filtered to user_syms —
-    the multi pass is a scheduling change only (one shuffle + one
-    pandas stage instead of one per plan)."""
-    from reshape_on_flink_spark.operators.cep import (
-        match_recognize,
-        match_recognize_multi,
-    )
-
-    rows = _fixture(97, n_keys=4, n_rows=40)
-    df = spark.createDataFrame(rows, "k int, ts int, name string")
-    plans = [
-        # the shapes the timeout builder emits: bare head, relaxed
-        # two-stage prefix with a reluctant filler, mid-loop prefix
-        # with a loop filler, bounded quantifier
-        dict(pattern="A", define={"A": _c("a")}, tag="0",
-             user_syms=["A"], within=12),
-        dict(pattern="A G*? B", tag="1", user_syms=["A", "B"],
-             define={"A": _c("a"), "G": ~_c("b"), "B": _c("b")},
-             filler_syms=["G"], within=12),
-        dict(pattern="A G*? B (L*? B)*", tag="2", user_syms=["A", "B"],
-             define={"A": _c("a"), "G": ~_c("b"), "B": _c("b"),
-                     "L": ~_c("b")},
-             filler_syms=["G", "L"], within=12),
-        dict(pattern="A B{1,2}", tag="3", user_syms=["A", "B"],
-             define={"A": _c("a"), "B": _c("b")}, within=12),
-    ]
-    multi = match_recognize_multi(df, ["k"], ["ts"], plans).collect()
-    by_tag: dict = {}
-    for r in multi:
-        by_tag.setdefault(r["__plan"], []).append(
-            (r.k, r.ts, r.name, r.match_id, r.matched_symbol)
-        )
-    for p in plans:
-        want = (
-            match_recognize(
-                df, ["k"], ["ts"], p["pattern"], p["define"],
-                after_match="no_skip", within=p.get("within"),
-                filler_syms=p.get("filler_syms"),
-            )
-            .where(F.col("matched_symbol").isin(p["user_syms"]))
-            .collect()
-        )
-        want_t = sorted(
-            (r.k, r.ts, r.name, r.match_id, r.matched_symbol) for r in want
-        )
-        got_t = sorted(by_tag.get(p["tag"], []))
-        assert got_t == want_t, p["tag"]
-
-
-def test_cep_multi_sequential_equals_single(spark):
-    """Sequential plans in match_recognize_multi (round 14, late — the
-    skip route's full-pattern pass rides the consolidated shuffle):
-    for every skip strategy, a plan carrying after_match equals a
-    standalone match_recognize with that strategy, filtered to
-    user_syms — including the >12-symbol per-key cursor fallback shape
-    via a second, filler-heavy pattern."""
-    from reshape_on_flink_spark.operators.cep import (
-        match_recognize,
-        match_recognize_multi,
-    )
-
-    rows = _fixture(41, n_keys=4, n_rows=40)
-    df = spark.createDataFrame(rows, "k int, ts int, name string")
-    shapes = [
-        ("A G*? B H*? C", {"A": _c("a"), "G": ~_c("b"), "B": _c("b"),
-                           "H": ~_c("c"), "C": _c("c")}, ["G", "H"]),
-        ("A B (L*? B)*? G*? C",
-         {"A": _c("a"), "B": _c("b"), "L": ~_c("b"), "G": ~_c("c"),
-          "C": _c("c")}, ["L", "G"]),
-    ]
-    for after in ("past_last_row", "to_next_row", "to_first B",
-                  "to_last B"):
-        plans = []
-        for i, (pat, define, fillers) in enumerate(shapes):
-            plans.append(dict(
-                pattern=pat, define=define, tag=f"s{i}",
-                user_syms=[s for s in define if not s.startswith(("G", "H", "L"))],
-                filler_syms=fillers, within=12, after_match=after,
-            ))
-        multi = match_recognize_multi(df, ["k"], ["ts"], plans).collect()
-        by_tag: dict = {}
-        for r in multi:
-            by_tag.setdefault(r["__plan"], []).append(
-                (r.k, r.ts, r.name, r.match_id, r.matched_symbol)
-            )
-        for p in plans:
-            want = (
-                match_recognize(
-                    df, ["k"], ["ts"], p["pattern"], p["define"],
-                    after_match=after, within=p.get("within"),
-                    filler_syms=p.get("filler_syms"),
-                )
-                .where(F.col("matched_symbol").isin(p["user_syms"]))
-                .collect()
-            )
-            want_t = sorted(
-                (r.k, r.ts, r.name, r.match_id, r.matched_symbol)
-                for r in want
-            )
-            got_t = sorted(by_tag.get(p["tag"], []))
-            assert got_t == want_t, (after, p["tag"])

@@ -290,6 +290,34 @@ def test_count_window_agg_fires_every_n(spark, tables, tmp_dir):
         assert got[key] == pytest.approx(expected[key], rel=1e-9)
 
 
+def test_chunked_replay_keeps_every_row_under_max_records_per_file(
+    spark, tables, tmp_dir
+):
+    """A session cap on records per file must not split a chunk into
+    several part files, of which the replay would keep only one."""
+    from reshape_on_flink_spark.streaming.source import chunked_replay
+
+    ev = tables["events"]
+    n_rows = ev.count()
+    key = "spark.sql.files.maxRecordsPerFile"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        stream = chunked_replay(
+            spark, ev, os.path.join(tmp_dir, "mrpf"), n_chunks=3,
+            order_col="event_id",
+        )
+    finally:
+        spark.conf.set(key, old)
+    flat = os.path.join(tmp_dir, "mrpf", "stream")
+    assert len([f for f in os.listdir(flat) if f.endswith(".parquet")]) == 3
+    got = run_to_memory(spark, stream, "mrpf_out", tmp_dir, mode="append")
+    assert got.count() == n_rows
+    assert got.select("event_id").distinct().count() == (
+        ev.select("event_id").distinct().count()
+    )
+
+
 def test_delta_trigger_agg_baseline_semantics(spark, tables, tmp_dir):
     from reshape_on_flink_spark.streaming.source import chunked_replay
     from reshape_on_flink_spark.streaming.triggers import delta_trigger_agg

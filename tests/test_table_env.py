@@ -1250,3 +1250,25 @@ def test_json_constructors_and_is_json(spark):
     import pytest as _p
     with _p.raises(ValueError, match="JSON_OBJECT expects"):
         tenv.execute_sql("SELECT JSON_OBJECT('a', 1) AS j")
+
+
+def test_default_driver_memory_stays_below_physical_ram(monkeypatch):
+    """The session's driver heap default is derived from physical RAM
+    (capped at 48g): a local-mode JVM sized above RAM is OOM-killed by
+    the kernel before it ever collects."""
+    from reshape_on_flink_spark import session
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    with open("/proc/meminfo") as fh:
+        mem_total_mb = next(
+            int(line.split()[1]) // 1024
+            for line in fh
+            if line.startswith("MemTotal:")
+        )
+    default = session.default_driver_memory()
+    assert default.endswith("m")
+    heap_mb = int(default[:-1])
+    assert heap_mb < mem_total_mb
+    assert heap_mb <= session.DRIVER_MEM_CAP_MB
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert session.default_driver_memory() == "3g"
